@@ -318,14 +318,13 @@ def main(argv=None):
         bench = Bench(spark, data_dir, run_dir, args.seed, parity, con)
         workload = WORKLOADS[args.workload](bench)
         workload.setup()
-        reps = getattr(workload, "export_s", [])
+        export_s = getattr(workload, "export_s", None)
         t = time.monotonic()
         warm_ops = workload.warm()
         warm_s = time.monotonic() - t
         # set-up: process start to the first timed op, without making
-        # the input tables; repeated exports count once, at their median
-        setup_s = (time.monotonic() - T0 - gen_s
-                   - (sum(reps) - statistics.median(reps) if reps else 0))
+        # the input tables
+        setup_s = time.monotonic() - T0 - gen_s
 
         if args.trace:
             bench.tracer = Tracer(spark.sparkContext)
@@ -338,8 +337,8 @@ def main(argv=None):
 
         if args.trace:
             sink_setup = None
-            if reps:
-                sink_setup = (statistics.median(reps),) + dir_usage(
+            if export_s is not None:
+                sink_setup = (export_s,) + dir_usage(
                     workload.cells_url)
             metrics = per_layer(bench, passes, storage, sink_setup)
             out_dir = os.path.join(ROOT, ".perfbench_out")
@@ -356,7 +355,7 @@ def main(argv=None):
             "scale": args.scale, "passes": len(passes),
             "ops": len(recs), "cores": bench.cores,
             "setup": {"make_inputs_s": gen_s, "session_s": session_s,
-                      "export_reps_s": reps, "warm_s": warm_s,
+                      "export_s": export_s, "warm_s": warm_s,
                       "warm_ops": len(warm_ops),
                       "warm_check_s": bench.warm_s},
             "latency_by_type": latency_by_type(recs),
