@@ -4,7 +4,11 @@ defaults (AQE, shuffle partitions, Arrow)."""
 
 from __future__ import annotations
 
+import collections
 import os
+import stat
+import threading
+import urllib.parse
 
 _spark = None
 
@@ -72,11 +76,139 @@ DEFAULTS = {
 }
 
 
+#: most (session, url) relations :func:`read_parquet` keeps; the least
+#: recently used one is dropped beyond it
+PARQUET_CACHE_ENTRIES = 64
+
+# session options that change the schema or partition values a parquet
+# read infers — part of the cache key
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.session.timeZone",
+    "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.files.ignoreMissingFiles",
+)
+
+_parquet_relations = collections.OrderedDict()
+_parquet_lock = threading.Lock()
+
+
+def _local_parquet_path(url):
+    """The absolute local path ``url`` names, or None when the read is
+    not cached (another scheme, a relative path or a glob)."""
+    if not isinstance(url, str):
+        return None
+    parsed = urllib.parse.urlparse(url)
+    if parsed.scheme == "file":
+        path = parsed.path
+    elif parsed.scheme == "":
+        path = url
+    else:
+        return None
+    if not os.path.isabs(path) or any(c in path for c in "*?[{"):
+        return None
+    return path
+
+
+def _path_fingerprint(path):
+    """``(relative path, size, mtime_ns)`` of every file under ``path``,
+    sorted; None when the path does not exist or changes while it is
+    walked."""
+    out = []
+
+    def walk(directory, prefix):
+        with os.scandir(directory) as it:
+            entries = sorted(it, key=lambda e: e.name)
+        for e in entries:
+            if e.is_dir():
+                walk(e.path, prefix + e.name + "/")
+            else:
+                st = e.stat()
+                out.append((prefix + e.name, st.st_size, st.st_mtime_ns))
+
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        walk(path, "")
+    except OSError:
+        return None
+    return tuple(out)
+
+
+def _fresh_frame(spark, relation):
+    """A DataFrame over the resolved ``relation`` with fresh attribute
+    ids, so two frames of one cached read can join each other."""
+    from pyspark.sql import DataFrame
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, relation.newInstance())
+    return DataFrame(jdf, spark)
+
+
+def read_parquet(spark, url):
+    """``spark.read.parquet(url)``, reusing the resolved relation of an
+    earlier read of the same local path.
+
+    A plain parquet read lists the files and infers the schema, and each
+    costs a Spark job (the listing one only above 32 paths) before any
+    plan exists.  For an absolute local path or a ``file:`` URL this
+    keeps, per session and URL, the resolved relation: its file index and
+    its schema.  The next read reuses it while the path's fingerprint —
+    ``(relative path, size, mtime_ns)`` of every file under it, walked
+    in this process — is unchanged and the session options that shape the
+    inferred schema are the same; it then launches no Spark job.  Any
+    rewrite, added or removed file re-reads the path; a missing path is
+    read uncached and raises as ``spark.read.parquet`` does.  Every call
+    returns a frame with fresh attribute ids, so reads of one URL can be
+    self-joined.  Other schemes (``hdfs:``, ``s3a:`` …), relative paths
+    and globs are not cached and keep the plain read.  At most
+    :data:`PARQUET_CACHE_ENTRIES` relations are kept."""
+    path = _local_parquet_path(url)
+    if path is None:
+        return spark.read.parquet(url)
+    key = (id(spark), url, tuple(spark.conf.get(k, None)
+                                 for k in _PARQUET_SCHEMA_CONFS))
+    fingerprint = _path_fingerprint(path)
+    with _parquet_lock:
+        entry = _parquet_relations.get(key)
+        if entry is not None and fingerprint is not None \
+                and entry[1] == fingerprint:
+            _parquet_relations.move_to_end(key)
+            relation = entry[2]
+        else:
+            relation = None
+            _parquet_relations.pop(key, None)
+    if relation is not None:
+        return _fresh_frame(spark, relation)
+    df = spark.read.parquet(url)
+    if fingerprint is not None:
+        # the fingerprint was taken before the read: a rewrite racing
+        # it leaves an entry the next read sees as stale
+        relation = df._jdf.queryExecution().analyzed()
+        with _parquet_lock:
+            # the session is kept in the entry so its id is not reused
+            _parquet_relations[key] = (spark, fingerprint, relation)
+            _parquet_relations.move_to_end(key)
+            while len(_parquet_relations) > PARQUET_CACHE_ENTRIES:
+                _parquet_relations.popitem(last=False)
+    return df
+
+
 def read_nanos_parquet(spark, url, time_column="ts"):
     """Read parquet whose time column is TIMESTAMP(NANOS) — Spark has no
     nanos timestamp type, so read nanos-as-long and convert to
     microsecond timestamps.  Runtime-settable, so it also works on an
-    externally provided SparkSession."""
+    externally provided SparkSession.
+
+    The read goes through :func:`read_parquet`: the file listing and
+    schema of a local path are reused until a file under it changes;
+    other schemes are read anew every time."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -86,7 +218,7 @@ def read_nanos_parquet(spark, url, time_column="ts"):
                        "false")
     except Exception:
         pass
-    df = spark.read.parquet(url)
+    df = read_parquet(spark, url)
     # an externally configured session may still have inferred NTZ —
     # normalize every temporal column to session-tz TIMESTAMP so the
     # whole engine sees one timestamp type

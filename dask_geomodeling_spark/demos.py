@@ -20,7 +20,8 @@ import os
 from pyspark.sql import functions as F
 
 from dask_geomodeling_spark.config import (ensure_min_partitions,
-                                           read_nanos_parquet)
+                                           read_nanos_parquet,
+                                           read_parquet)
 from dask_geomodeling_spark.geometry.sources import (DataFrameSource,
                                                      ParquetGeometrySource)
 
@@ -2769,7 +2770,7 @@ def geometry_sink_roundtrip(spark, sf_dir):
                             fields={"idx": "c_custkey", "c_name": "c_name",
                                     "c_acctbal": "c_acctbal"})
     sink.write(spark)
-    return spark.read.parquet(url)
+    return read_parquet(spark, url)
 
 
 @demo("raster_sink_roundtrip", oracle="""
@@ -2785,7 +2786,7 @@ def raster_sink_roundtrip(spark, sf_dir):
     url = tempfile.mkdtemp(prefix="dgs_sink_raster_") + "/out"
     sink = RasterFileSink(lineitem_grid(spark, sf_dir, "R"), url)
     sink.write(spark)
-    return (spark.read.parquet(url)
+    return (read_parquet(spark, url)
             .select("time", "y", "x", "value"))
 
 

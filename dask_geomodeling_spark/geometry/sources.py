@@ -12,6 +12,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from dask_geomodeling_spark.config import read_parquet
 from dask_geomodeling_spark.geometry.base import (GeometryBlock,
                                                   apply_feature_request)
 
@@ -147,6 +148,13 @@ class ParquetGeometrySource(GeometryBlock):
     """Read features from parquet (reference: GeometryFileSource,
     geometry/sources.py:18).
 
+    The read goes through :func:`~dask_geomodeling_spark.config.read_parquet`:
+    for a local path the file listing and inferred schema of the first
+    build are reused by later builds, which launch no Spark job before
+    the plan exists, until a file under the path is added, removed or
+    rewritten (size or mtime changes); then the path is read anew.
+    Other schemes (``hdfs:``, ``s3a:`` …) are read anew on every build.
+
     Args:
       url: parquet path (file/dir; any Hadoop-compatible FS at scale).
       id_field: index column for cross-lineage alignment (reference uses
@@ -203,7 +211,7 @@ class ParquetGeometrySource(GeometryBlock):
         return set(self.args[3]) if self.args[3] else set()
 
     def _build(self, ctx):
-        df = ctx.spark.read.parquet(self.url)
+        df = read_parquet(ctx.spark, self.url)
         if self.args[3]:
             df = df.select(*self.args[3])
         minp = self.args[5]
@@ -398,7 +406,7 @@ class FileGeometrySource(GeometryBlock):
         url, fmt, _, time_column, schema = self.args[:5]
         reader = ctx.spark.read
         if fmt == "parquet":
-            df = reader.parquet(url)
+            df = read_parquet(ctx.spark, url)
         elif fmt == "csv":
             df = reader.schema(schema).option("header", True).csv(url)
         elif fmt == "geojson":

@@ -32,6 +32,7 @@ import struct
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dask_geomodeling_spark.config import read_parquet
 from dask_geomodeling_spark.geometry.base import (BaseSingle,
                                                   GeometryBlock,
                                                   apply_feature_request)
@@ -352,7 +353,7 @@ class WKBGeometrySource(GeometryBlock):
 
     def _build(self, ctx):
         url, wkb_column, _, time_column, _ = self.args
-        df = ctx.spark.read.parquet(url)
+        df = read_parquet(ctx.spark, url)
         pre = {k: ctx.request[k] for k in ("filters", "start", "stop")
                if k in ctx.request}
         df = apply_feature_request(df, pre, time_column=time_column)

@@ -15,6 +15,7 @@ import random
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dask_geomodeling_spark.config import read_parquet
 from dask_geomodeling_spark.core.blocks import Block
 from dask_geomodeling_spark.geometry.base import BaseSingle
 
@@ -287,7 +288,7 @@ class MinHashLSH(BaseSingle):
         # that the operator can never free.  Executor storage after
         # plan() is EMPTY (pinned by
         # tests/test_explain_plans.py::test_against_lsh_leaves_no_storage).
-        saved = ctx.spark.read.parquet(url)
+        saved = read_parquet(ctx.spark, url)
         want = {"_id", "_shingles"} | {
             "_s{}".format(i) for i in range(num_perm)}
         if not want <= set(saved.columns) \
@@ -465,7 +466,7 @@ class FingerprintTableSink(BaseSingle):
         silently probe a half-rewritten hash space)."""
         from pyspark.errors import AnalysisException
         try:
-            rows = spark.read.parquet(url + "_meta").collect()
+            rows = read_parquet(spark, url + "_meta").collect()
         except AnalysisException:
             return None
         if not rows:
@@ -482,7 +483,7 @@ class FingerprintTableSink(BaseSingle):
     def _exists(spark, url):
         from pyspark.errors import AnalysisException
         try:
-            spark.read.parquet(url).schema
+            read_parquet(spark, url)
             return True
         except AnalysisException:
             return False

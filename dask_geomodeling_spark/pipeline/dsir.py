@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dask_geomodeling_spark.config import read_parquet
 from dask_geomodeling_spark.geometry.base import (BaseSingle,
                                                   GeometryBlock)
 from dask_geomodeling_spark.pipeline.dedup import (MERSENNE,
@@ -95,7 +96,7 @@ def save_dsir_model(df, url):
 
 
 def load_dsir_model(spark, url):
-    return spark.read.parquet(url)
+    return read_parquet(spark, url)
 
 
 class DSIRSelect(GeometryBlock):

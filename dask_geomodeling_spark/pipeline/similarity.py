@@ -17,6 +17,7 @@ import random
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dask_geomodeling_spark.config import read_parquet
 from dask_geomodeling_spark.geometry.base import BaseSingle
 
 __all__ = ["CosineTopK", "BucketedANN", "KMeansIVF", "IVFPQ",
@@ -262,7 +263,7 @@ def save_centroids(spark, cents, url):
 def load_centroids(spark, url):
     """Inverse of :func:`save_centroids` — returns plain python lists
     ordered by cid (only k×dim values reach the driver)."""
-    rows = spark.read.parquet(url).orderBy("cid").collect()
+    rows = read_parquet(spark, url).orderBy("cid").collect()
     return [[float(x) for x in r["centroid"]] for r in rows]
 
 

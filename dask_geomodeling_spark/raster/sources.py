@@ -15,6 +15,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from dask_geomodeling_spark.config import read_parquet
 from dask_geomodeling_spark.utils import dt_to_ms
 from dask_geomodeling_spark.raster.base import (EPOCH, RasterBlock,
                                                 apply_raster_request)
@@ -122,7 +123,15 @@ class RasterParquetSource(RasterBlock):
     RasterFileSource, raster/sources.py:396, which reads GDAL files via a
     time-indexed URL template).  Expect columns (time, y, x, value);
     a directory partitioned by date and bucketed by (y, x) gives partition
-    pruning on time plus shuffle-free grid joins."""
+    pruning on time plus shuffle-free grid joins.
+
+    The read goes through :func:`~dask_geomodeling_spark.config.read_parquet`:
+    for a local path the file listing (the date directories) and inferred
+    schema of the first build are reused by later builds, which launch no
+    Spark job before the plan exists, until a file under the path is
+    added, removed or rewritten (size or mtime changes) — a
+    ``RasterFileSink`` overwrite, say; then the path is read anew.  Other
+    schemes (``hdfs:``, ``s3a:`` …) are read anew on every build."""
 
     def __init__(self, url, time_first=None, time_delta=None):
         if not isinstance(url, str):
@@ -130,7 +139,7 @@ class RasterParquetSource(RasterBlock):
         super().__init__(url, time_first, time_delta)
 
     def _build(self, ctx):
-        df = ctx.spark.read.parquet(self.args[0])
+        df = read_parquet(ctx.spark, self.args[0])
         # a RasterFileSink layout carries a `date` partition column:
         # derive partition predicates from the time request so the scan
         # prunes whole date directories (PartitionFilters), not just

@@ -5,6 +5,10 @@ data cell emits one row per kernel offset map-side (≤k² rows), then ONE
 grouped aggregation re-forms the grid.  This replaces the reference's
 expand-request + ndimage filter with a plan that scales horizontally: no
 halo exchange, no driver loop, one shuffle per kernel.
+
+A ``bbox`` request keeps the reference's expand-then-crop contract: the
+source is read under the bbox padded by the kernel's footprint radius and
+the output is cropped back to the bbox (``_FocalKernel``).
 """
 
 from __future__ import annotations
@@ -14,6 +18,7 @@ import math
 from pyspark.sql import functions as F
 
 from dask_geomodeling_spark.raster.base import (BaseSingle, RasterBlock,
+                                                apply_raster_request,
                                                 raster_statistic_expr)
 
 __all__ = ["Dilate", "MovingMax", "Smooth", "HillShade", "Slope",
@@ -47,7 +52,39 @@ def _circular_offsets(radius, include_center=True):
     return out
 
 
-class Dilate(BaseSingle):
+class _FocalKernel(BaseSingle):
+    """Base of the neighbourhood kernels: an output cell depends on the
+    source cells within ``_radius()`` cells of it (1 by default, the 3×3
+    window).  Under a ``bbox`` request the kernel reads the source under
+    the bbox padded by that radius and its output is cropped to the
+    bbox, so a windowed request returns exactly the crop of the
+    full-extent result (the reference expands the request by the
+    footprint the same way).  ``width``/``height`` striding applies to
+    the output; the kernel itself runs on the native grid, so it equals
+    the strided crop of the full-extent result.  The cost of a
+    downsampled request therefore follows the native cells of the
+    padded bbox, not the output size: a stride of s in both axes reads
+    and shuffles about s² times the cells it returns."""
+
+    def _radius(self):
+        return 1
+
+    def _kernel(self, ctx):
+        raise NotImplementedError
+
+    def _build(self, ctx):
+        bbox = ctx.request.get("bbox")
+        if bbox is None:
+            return self._kernel(ctx)
+        r = self._radius()
+        x1, y1, x2, y2 = bbox
+        padded = ctx.child(bbox=(x1 - r, y1 - r, x2 + r, y2 + r),
+                           width=None, height=None)
+        crop = {k: ctx.request.get(k) for k in ("bbox", "width", "height")}
+        return apply_raster_request(self._kernel(padded), crop)
+
+
+class Dilate(_FocalKernel):
     """Dilate cells with listed values by one cell in all 8 directions,
     in the order of ``values`` (reference: raster/spatial.py:111)."""
 
@@ -59,7 +96,7 @@ class Dilate(BaseSingle):
     def values(self):
         return self.args[1]
 
-    def _build(self, ctx):
+    def _kernel(self, ctx):
         df = self.store._build(ctx)
         base = df.select("time", "y", "x", "value",
                          F.lit(-1).alias("_prio"))
@@ -84,7 +121,7 @@ class Dilate(BaseSingle):
                 .agg(F.expr("max_by(value, _prio)").alias("value")))
 
 
-class MovingMax(BaseSingle):
+class MovingMax(_FocalKernel):
     """Maximum filter with a circular footprint (reference:
     raster/spatial.py:158)."""
 
@@ -98,9 +135,12 @@ class MovingMax(BaseSingle):
     def size(self):
         return self.args[1]
 
-    def _build(self, ctx):
+    def _radius(self):
+        return self.size // 2
+
+    def _kernel(self, ctx):
         df = self.store._build(ctx).filter(F.col("value").isNotNull())
-        radius = self.size // 2
+        radius = self._radius()
         offsets = _offsets_df(ctx.spark, _circular_offsets(radius))
         return (df.crossJoin(offsets)
                 .select("time",
@@ -111,7 +151,7 @@ class MovingMax(BaseSingle):
                 .agg(F.max("value").alias("value")))
 
 
-class Smooth(BaseSingle):
+class Smooth(_FocalKernel):
     """Gaussian smoothing (reference: raster/spatial.py:216; sigma =
     size / 3, no-data replaced by ``fill`` before filtering).
 
@@ -135,9 +175,15 @@ class Smooth(BaseSingle):
     def fill(self):
         return self.args[2]
 
-    def _build(self, ctx):
-        sigma = max(self.size / 3.0, 1e-9)
-        radius = max(int(math.ceil(2 * sigma)), 1)
+    def _sigma(self):
+        return max(self.size / 3.0, 1e-9)
+
+    def _radius(self):
+        return max(int(math.ceil(2 * self._sigma())), 1)
+
+    def _kernel(self, ctx):
+        sigma = self._sigma()
+        radius = self._radius()
         offs = []
         for dy in range(-radius, radius + 1):
             for dx in range(-radius, radius + 1):
@@ -199,7 +245,7 @@ def _horn_gradients(ctx, store):
     return df, g, gx, gy
 
 
-class HillShade(BaseSingle):
+class HillShade(_FocalKernel):
     """Hillshade from cell values (reference: raster/spatial.py:310,
     GDAL-style Horn gradient).  The 3×3 neighborhood is pivoted into
     gradient sums via conditional aggregation — one shuffle."""
@@ -218,7 +264,7 @@ class HillShade(BaseSingle):
     def azimuth(self):
         return self.args[2]
 
-    def _build(self, ctx):
+    def _kernel(self, ctx):
         df, g, gx, gy = _horn_gradients(ctx, self.store)
         alt = math.radians(self.altitude)
         az = math.radians(self.azimuth)
@@ -236,7 +282,7 @@ class HillShade(BaseSingle):
         return out.join(original, ["time", "y", "x"], "left_semi")
 
 
-class Slope(BaseSingle):
+class Slope(_FocalKernel):
     """Slope in degrees from cell values — the standard Horn (1981)
     terrain derivative GDAL's ``gdaldem slope`` computes (no reference
     analogue: the reference ships HillShade only, raster/spatial.py:310;
@@ -253,7 +299,7 @@ class Slope(BaseSingle):
                 "'{}' object is not allowed".format(type(z_factor)))
         super().__init__(store, float(z_factor))
 
-    def _build(self, ctx):
+    def _kernel(self, ctx):
         df, g, gx, gy = _horn_gradients(ctx, self.store)
         z = float(self.args[1])
         slope = F.degrees(F.atan(F.lit(z) * F.sqrt(gx * gx + gy * gy)))
@@ -264,7 +310,7 @@ class Slope(BaseSingle):
                         ["time", "y", "x"], "left_semi")
 
 
-class Aspect(BaseSingle):
+class Aspect(_FocalKernel):
     """Downslope direction as compass degrees [0, 360) — ``gdaldem
     aspect`` with north = +y, clockwise (no reference analogue; Horn
     gradient shared with HillShade/Slope).
@@ -276,7 +322,7 @@ class Aspect(BaseSingle):
     def __init__(self, store):
         super().__init__(store)
 
-    def _build(self, ctx):
+    def _kernel(self, ctx):
         df, g, gx, gy = _horn_gradients(ctx, self.store)
         flat = (gx == 0) & (gy == 0)
         compass = F.pmod(F.degrees(F.atan2(-gx, -gy)) + 360.0,
@@ -288,7 +334,7 @@ class Aspect(BaseSingle):
                         ["time", "y", "x"], "left_semi")
 
 
-class _Window3Metric(BaseSingle):
+class _Window3Metric(_FocalKernel):
     """Shared base for the gdaldem 3×3 window metrics (TRI / TPI /
     Roughness — no reference analogue; the neighborhood build is the
     HillShade scatter + conditional aggregation, one shuffle).
@@ -298,7 +344,7 @@ class _Window3Metric(BaseSingle):
     def _metric(self, c):
         raise NotImplementedError
 
-    def _build(self, ctx):
+    def _kernel(self, ctx):
         df, g, _, _ = _horn_gradients(ctx, self.store)
         c = {(ky, kx): F.coalesce(
                 F.col("c{}{}".format(ky + 1, kx + 1)), F.col("c11"))
@@ -413,7 +459,7 @@ class Place(BaseSingle):
         return (placed.groupBy("time", "y", "x").agg(agg.alias("value")))
 
 
-class Curvature(BaseSingle):
+class Curvature(_FocalKernel):
     """Surface curvature (Zevenbergen & Thorne 1987 — the ArcGIS
     Curvature tool's quadric fit; no reference analogue, extends the
     gdaldem terrain family).  Over the unit 3×3 window (missing
@@ -439,7 +485,7 @@ class Curvature(BaseSingle):
                 "kind must be 'standard', 'profile' or 'plan'")
         super().__init__(store, kind)
 
-    def _build(self, ctx):
+    def _kernel(self, ctx):
         df, g, _, _ = _horn_gradients(ctx, self.store)
         c = {(ky, kx): F.coalesce(
                 F.col("c{}{}".format(ky + 1, kx + 1)), F.col("c11"))
@@ -467,7 +513,7 @@ class Curvature(BaseSingle):
                         ["time", "y", "x"], "left_semi")
 
 
-class RasterProximity(BaseSingle):
+class RasterProximity(_FocalKernel):
     """Bounded-radius distance transform — ``gdal_proximity`` with
     ``-maxdist`` (no reference analogue; completes the gdaldem/
     gdal_* raster toolbox family).  Every cell of the store gets the
@@ -493,7 +539,10 @@ class RasterProximity(BaseSingle):
             values = tuple(float(v) for v in values)
         super().__init__(store, d, values)
 
-    def _build(self, ctx):
+    def _radius(self):
+        return int(math.floor(self.args[1]))
+
+    def _kernel(self, ctx):
         d, values = float(self.args[1]), self.args[2]
         df = self.store._build(ctx).filter(F.col("value").isNotNull())
         v = F.col("value").cast("double")
@@ -519,7 +568,7 @@ class RasterProximity(BaseSingle):
                         F.col("_d").alias("value")))
 
 
-class RasterAllocation(BaseSingle):
+class RasterAllocation(_FocalKernel):
     """Bounded-radius Euclidean ALLOCATION — each cell takes the
     VALUE of its nearest source cell within ``max_distance`` (ArcGIS
     Euclidean Allocation / the Voronoi-label counterpart of
@@ -539,7 +588,10 @@ class RasterAllocation(BaseSingle):
             values = tuple(float(v) for v in values)
         super().__init__(store, d, values, sources)
 
-    def _build(self, ctx):
+    def _radius(self):
+        return int(math.floor(self.args[1]))
+
+    def _kernel(self, ctx):
         d, values = float(self.args[1]), self.args[2]
         df = self.store._build(ctx).filter(F.col("value").isNotNull())
         sstore = self.args[3]
@@ -572,7 +624,7 @@ class RasterAllocation(BaseSingle):
                         F.col("_s.v").alias("value")))
 
 
-class FocalStatistic(BaseSingle):
+class FocalStatistic(_FocalKernel):
     """Generic focal (neighborhood) statistic (round 9) — the
     ArcGIS/GDAL Focal Statistics family generalizing MovingMax
     (spatial.py:77) to the engine's whole statistic vocabulary:
@@ -612,7 +664,10 @@ class FocalStatistic(BaseSingle):
     def size(self):
         return self.args[2]
 
-    def _build(self, ctx):
+    def _radius(self):
+        return self.size // 2
+
+    def _kernel(self, ctx):
         from dask_geomodeling_spark.functions import statistic_expr
         _, statistic, size, footprint, restrict = self.args
         df = self.store._build(ctx).filter(F.col("value").isNotNull())
@@ -638,7 +693,7 @@ class FocalStatistic(BaseSingle):
         return out
 
 
-class IDWInterpolate(BaseSingle):
+class IDWInterpolate(_FocalKernel):
     """Inverse-distance-weighted interpolation / nodata filling
     (round 9) — the ``gdal_fillnodata`` / ``gdal_grid invdist``
     counterpart on the cell table: every cell within ``max_distance``
@@ -663,7 +718,10 @@ class IDWInterpolate(BaseSingle):
             raise ValueError("power must be > 0")
         super().__init__(store, d, p)
 
-    def _build(self, ctx):
+    def _radius(self):
+        return int(math.floor(self.args[1]))
+
+    def _kernel(self, ctx):
         import math as _math
         d, p = float(self.args[1]), float(self.args[2])
         df = self.store._build(ctx).filter(F.col("value").isNotNull())
@@ -719,7 +777,7 @@ def _ray_offsets(radius):
     return rows
 
 
-class Viewshed(BaseSingle):
+class Viewshed(_FocalKernel):
     """Line-of-sight visibility over a DEM (ESRI ``Viewshed`` /
     GRASS ``r.viewshed`` analogue; round 13, verdict #4 — completes
     the terrain suite beside the D8 family and the cost surface).
@@ -784,7 +842,10 @@ class Viewshed(BaseSingle):
     def columns(self):
         return {"time", "y", "x", "value"}
 
-    def _build(self, ctx):
+    def _radius(self):
+        return self.args[2]
+
+    def _kernel(self, ctx):
         from pyspark.sql import Window
         _, obs_blk, R, th, cs, curve, refr = self.args
         spark = ctx.spark

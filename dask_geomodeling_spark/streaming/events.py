@@ -95,11 +95,12 @@ class EventSource(Block):
     def _build(self, ctx):
         import os
         from pyspark.sql import types as T
-        from dask_geomodeling_spark.config import read_nanos_parquet
+        from dask_geomodeling_spark.config import (read_nanos_parquet,
+                                                   read_parquet)
         url, streaming, watermark, time_column = self.args
         if streaming:
             reader = (ctx.spark.readStream.format("parquet")
-                      .schema(ctx.spark.read.parquet(url).schema))
+                      .schema(read_parquet(ctx.spark, url).schema))
             if os.path.isfile(url):
                 # FileStreamSource only accepts directories; point it at
                 # the parent with a glob narrowing to the single file

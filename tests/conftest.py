@@ -8,3 +8,9 @@ def spark():
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def stored_rdd_ids(spark):
+    """Ids of the RDDs that hold executor storage right now."""
+    return {info.id()
+            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}

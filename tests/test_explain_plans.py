@@ -9,6 +9,8 @@ import io
 
 from pyspark.sql import functions as F
 
+from conftest import stored_rdd_ids
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -911,11 +913,10 @@ def test_dbscan_no_cartesian_pairs_freed(spark):
     # the pair/core caches freed during _build: rebuilding must not
     # accumulate persisted RDDs beyond the one label checkpoint each
     from dask_geomodeling_spark import demos as _d
-    jsc = spark.sparkContext._jsc.sc()
-    before = len(jsc.getRDDStorageInfo())
+    before = stored_rdd_ids(spark)
     _d.QUERIES["dbscan_clusters"](spark, SF_DIR)
-    after = len(jsc.getRDDStorageInfo())
-    assert after - before <= 1, (before, after)
+    added = stored_rdd_ids(spark) - before
+    assert len(added) <= 1, added
 
 
 def test_incremental_dedup_reads_saved_table_not_corpus(spark, tmp_path):
@@ -946,11 +947,9 @@ def test_bm25_leaves_no_storage(spark):
     table, so building + materializing the plan leaves executor
     storage exactly where it was."""
     from dask_geomodeling_spark import demos
-    jsc = spark.sparkContext._jsc.sc()
-    before = len(jsc.getRDDStorageInfo())
+    before = stored_rdd_ids(spark)
     demos.QUERIES["bm25_score"](spark, SF_DIR).collect()
-    after = len(jsc.getRDDStorageInfo())
-    assert after == before, (before, after)
+    assert not stored_rdd_ids(spark) - before
 
 
 def test_against_lsh_leaves_no_storage(spark, tmp_path):
@@ -970,12 +969,10 @@ def test_against_lsh_leaves_no_storage(spark, tmp_path):
                          shingle_size=2, hash_fn="poly").write(spark)
     batch = LiteralGeometrySource(
         [{"doc_id": 9, "text": "alpha beta gamma delta"}])
-    jsc = spark.sparkContext._jsc.sc()
-    before = len(jsc.getRDDStorageInfo())
+    before = stored_rdd_ids(spark)
     MinHashLSH(batch, num_perm=8, bands=4, shingle_size=2,
                hash_fn="poly", against=url).plan(spark).collect()
-    after = len(jsc.getRDDStorageInfo())
-    assert after == before, (before, after)
+    assert not stored_rdd_ids(spark) - before
 
 
 def test_stream_order_joins_stay_keyed(spark):
@@ -1041,6 +1038,25 @@ def test_kll_quantile_partial_aggregates_and_prunes(spark):
     fplan = plan_of(df, "formatted")
     scan = fplan[fplan.index("ReadSchema"):].splitlines()[0]
     assert "l_extendedprice" in scan and "l_comment" not in scan
+
+
+def test_kll_rebuilds_keep_storage_bounded(spark):
+    """KLLQuantile persists its hashed projection for the two passes; a
+    rebuild of the block under another request unpersists the one the
+    earlier build left.  The earlier plan still runs without it and
+    stores nothing again."""
+    from dask_geomodeling_spark.geometry.sources import DataFrameSource
+    from dask_geomodeling_spark.pipeline.text import KLLQuantile
+    df = spark.range(2000).select(
+        "id", ((F.col("id") * 53) % 881).alias("v"))
+    blk = KLLQuantile(DataFrameSource(df, index_column="id"), "v", k=64,
+                      id_column="id")
+    before = stored_rdd_ids(spark)
+    first = blk.plan(spark, filters={"v__lt": 500})
+    expected = first.collect()
+    blk.plan(spark, filters={"v__gte": 500}).collect()
+    assert first.collect() == expected
+    assert len(stored_rdd_ids(spark) - before) <= 1
 
 
 def test_streaming_hll_single_aggregation(spark):

@@ -2632,3 +2632,65 @@ def test_viewshed_earth_curvature_horizon(spark):
         radius=R, cell_size=cs).plan(spark)
         .filter("y = 0 AND x >= 0").collect()}
     assert all(v == 1.0 for v in flat.values())
+
+
+def _kernel_dem():
+    """Two 14×14 bands of small integer-valued cells with gaps."""
+    return [[[None if (3 * y + 5 * x + b) % 11 == 0
+              else float((y * 7 + x * 3 + b * 5) % 4)
+              for x in range(14)] for y in range(14)] for b in range(2)]
+
+
+def _kernel_cases():
+    src = MemorySource(_kernel_dem(), time_first=datetime(2024, 1, 1),
+                       time_delta=timedelta(days=1))
+    observers = MemorySource(
+        [[[2.0 if (y, x) in ((2, 3), (8, 11), (12, 1)) else None
+           for x in range(14)] for y in range(14)]] * 2,
+        time_first=datetime(2024, 1, 1), time_delta=timedelta(days=1))
+    return {
+        "Dilate": spatial.Dilate(src, [1.0, 3.0]),
+        "MovingMax3": spatial.MovingMax(src, 3),
+        "MovingMax5": spatial.MovingMax(src, 5),
+        "Smooth": spatial.Smooth(src, 3, fill=1),
+        "HillShade": spatial.HillShade(src),
+        "Slope": spatial.Slope(src),
+        "Aspect": spatial.Aspect(src),
+        "TRI": spatial.TRI(src),
+        "TPI": spatial.TPI(src),
+        "Roughness": spatial.Roughness(src),
+        "Curvature": spatial.Curvature(src, "profile"),
+        "RasterProximity": spatial.RasterProximity(src, 2.5, [3.0]),
+        "RasterAllocation": spatial.RasterAllocation(src, 2.0, [3.0]),
+        "FocalStatistic": spatial.FocalStatistic(src, "median", 5),
+        "FocalStatisticRestrict": spatial.FocalStatistic(
+            src, "sum", 3, footprint="square", restrict=True),
+        "IDWInterpolate": spatial.IDWInterpolate(src, 2.0),
+        "Viewshed": spatial.Viewshed(src, observers, radius=3),
+    }
+
+
+@pytest.mark.parametrize("request_", [
+    {"bbox": (4, 3, 9, 10)},
+    {"bbox": (0, 0, 5, 4)},
+    {"bbox": (1, 2, 12, 13), "width": 4, "height": 3},
+], ids=["inner", "corner", "strided"])
+@pytest.mark.parametrize("name", sorted(_kernel_cases()))
+def test_kernel_window_equals_cropped_full_extent(spark, name, request_):
+    """A neighbourhood kernel under a bbox request reads the source
+    padded by its footprint and crops its output, so a tile equals the
+    crop of the full-extent result — cells at the tile edge see their
+    neighbours outside it, and no cell outside the tile is returned.
+    A width/height request strides that crop: the kernel still runs on
+    the native grid."""
+    block = _kernel_cases()[name]
+    x1, y1, x2, y2 = request_["bbox"]
+    sx = (x2 - x1 + 1) // request_.get("width", x2 - x1 + 1)
+    sy = (y2 - y1 + 1) // request_.get("height", y2 - y1 + 1)
+    full = {k: v for k, v in cells(spark, block).items()
+            if x1 <= k[2] <= x2 and y1 <= k[1] <= y2
+            and (k[2] - x1) % sx == 0 and (k[1] - y1) % sy == 0}
+    tile = cells(spark, block, **request_)
+    assert full and tile.keys() == full.keys()
+    for k, v in full.items():
+        assert tile[k] == (v if v is None else pytest.approx(v)), k
