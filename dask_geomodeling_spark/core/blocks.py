@@ -70,7 +70,12 @@ class BuildContext:
     """Carries the SparkSession and the (possibly empty) request while a
     Block stack builds its DataFrame plan.  The request is the relational
     translation of the reference's pull-based request dict: filters become
-    WHERE clauses that sources push into the parquet scan."""
+    WHERE clauses that sources push into the parquet scan.
+
+    The request key ``driver_threshold`` sets the row limit of every
+    bounded driver gate in the stack (see :meth:`collect_bounded`);
+    ``driver_threshold=0`` forces every gate onto its distributed
+    path."""
 
     def __init__(self, spark, request=None):
         self.spark = spark
@@ -80,6 +85,32 @@ class BuildContext:
         req = dict(self.request)
         req.update(overrides)
         return BuildContext(self.spark, req)
+
+    def collect_bounded(self, df, default, nan_column=None):
+        """The bounded driver gate: ``df``'s rows as a list when there
+        are at most ``n`` of them, else ``None`` (take the distributed
+        path).  ``n`` is the request's ``driver_threshold``, or
+        ``default`` (the gate's module constant) when the request has
+        none; ``n <= 0`` returns ``None`` without running a job.
+
+        One ``df.limit(n + 1).collect()`` job: LocalLimit stops each
+        scan task early on data-sized inputs, and in the bounded case
+        the probe IS the collect, so the upstream plan runs once.  A
+        NaN in ``nan_column`` on any collected row also returns
+        ``None``: Spark joins match NaN = NaN and order NaN above every
+        number, Python does neither, so an exact driver mirror would
+        diverge."""
+        n = self.request.get("driver_threshold")
+        n = int(default if n is None else n)
+        if n <= 0:
+            return None
+        rows = df.limit(n + 1).collect()
+        if len(rows) > n:
+            return None
+        if nan_column is not None and any(
+                r[nan_column] != r[nan_column] for r in rows):
+            return None
+        return rows
 
 
 class Block:

@@ -2334,7 +2334,7 @@ SELECT n.time, n.y, n.x, n.value,
               CAST(mn.x AS VARCHAR)) AS component
 FROM n JOIN m ON n.id = m.src
 """.format(grid=_grid_sql()))
-def raster_components(spark, sf_dir):
+def raster_components(spark, sf_dir, **request):
     """RasterComponents: connected-component labeling (the polygonize
     core) of a binarized 16x8 window — time-summed cell values step at
     the median (865), then adjacent same-value cells label with their
@@ -2356,7 +2356,8 @@ def raster_components(spark, sf_dir):
                    .otherwise(0.0).alias("value"))
               .select(F.lit("1970-01-01").cast("timestamp")
                       .alias("time"), "y", "x", "value"))
-    return RasterComponents(DataFrameRasterSource(binary)).plan(spark)
+    return RasterComponents(DataFrameRasterSource(binary)).plan(
+        spark, **request)
 
 
 @demo("raster_polygonize", oracle="""
@@ -6087,7 +6088,7 @@ SELECT cluster_id, doc_id, n_chars,
        CAST(n_members AS BIGINT) AS n_members
 FROM sel WHERE rn = 1
 """.format(sh=_dd_shingles(3)))
-def cluster_representative(spark, sf_dir):
+def cluster_representative(spark, sf_dir, **request):
     """ClusterRepresentative (round 9): collapse each NgramJaccard +
     DedupClusters near-dup cluster to its best member (max n_chars,
     ties to the smallest doc id) in ONE max_by hash aggregation — the
@@ -6104,8 +6105,8 @@ def cluster_representative(spark, sf_dir):
     clusters = DedupClusters(docs, pairs, algorithm="star",
                              ids_unique=True, pairs_canonical=True)
     rep = ClusterRepresentative(docs, clusters, "n_chars")
-    return rep.plan(spark).select("cluster_id", "doc_id", "n_chars",
-                                  "n_members")
+    return rep.plan(spark, **request).select(
+        "cluster_id", "doc_id", "n_chars", "n_members")
 
 
 @demo("geojsonseq_roundtrip", oracle="""
@@ -6512,7 +6513,7 @@ SELECT TIMESTAMP '2024-01-01' AS time,
             ELSE 0.0 END AS value
 FROM nation a CROSS JOIN nation b
 """)
-def sieve_filter(spark, sf_dir):
+def sieve_filter(spark, sf_dir, **request):
     """SieveFilter (round 9, gdal_sieve): isolated single-cell specks
     (value 1, spaced 5 apart so they never touch) merge into their
     largest neighbor — the connected background (value 0) — while the
@@ -6533,7 +6534,7 @@ def sieve_filter(spark, sf_dir):
                         "WHEN y % 5 = 2 AND x % 5 = 2 THEN 1.0D "
                         "ELSE 0.0D END").alias("value")))
     out = SieveFilter(DataFrameRasterSource(grid), threshold=5)
-    return out.plan(spark)
+    return out.plan(spark, **request)
 
 
 @demo("sieve_filter_iterate", oracle="""
@@ -6614,7 +6615,7 @@ SELECT TIMESTAMP '2024-01-01' AS time,
                       AS DOUBLE) END AS value
 FROM nation a CROSS JOIN nation b
 """)
-def flow_accumulation(spark, sf_dir):
+def flow_accumulation(spark, sf_dir, **request):
     """FlowAccumulation (round 10, verdict #7) composed over
     FlowDirection on the ramp z = y + x: interior cells receive the
     NW-bound diagonal chain above them (min(24−y, 24−x) cells), edge
@@ -6634,7 +6635,7 @@ def flow_accumulation(spark, sf_dir):
                     "y", "x",
                     F.expr("CAST(y + x AS DOUBLE)").alias("value")))
     fd = FlowDirection(DataFrameRasterSource(grid))
-    return FlowAccumulation(fd).plan(spark)
+    return FlowAccumulation(fd).plan(spark, **request)
 
 
 @demo("bm25_score", oracle="""
@@ -6855,7 +6856,7 @@ SELECT p.id, CAST(lab.cid AS BIGINT) AS cluster_id,
        COALESCE(lab.is_core, FALSE) AS is_core
 FROM pts p LEFT JOIN lab ON lab.id = p.id
 """.format(pts=_DBSCAN_PTS_DUCK))
-def dbscan_clusters(spark, sf_dir):
+def dbscan_clusters(spark, sf_dir, **request):
     """ClusterDBSCAN (round 11, ST_ClusterDBSCAN): two dense
     half-unit lattice blobs (every point core at eps=2, min_points=4)
     plus a 50-unit-spaced noise diagonal — clusters label by smallest
@@ -6873,7 +6874,8 @@ def dbscan_clusters(spark, sf_dir):
            .select("id", F.expr(xe).alias("x"), F.expr(ye).alias("y")))
     src = DataFrameSource(pts, index_column="id")
     blk = ClusterDBSCAN(src, eps=2.0, min_points=4)
-    return blk.plan(spark).select("id", "cluster_id", "is_core")
+    return blk.plan(spark, **request).select("id", "cluster_id",
+                                             "is_core")
 
 
 @demo("flow_length", oracle="""
@@ -12493,7 +12495,7 @@ FROM kept GROUP BY grp
 
 
 @demo("kll_quantile", oracle=_kll_oracle())
-def kll_quantile(spark, sf_dir):
+def kll_quantile(spark, sf_dir, **request):
     """KLLQuantile (round 12): engine-exact mergeable quantile sketch
     — p25/p50/p75/p90/p99 of the (bigint-cast) l_extendedprice PER
     l_returnflag, k=256.  Per-row level = trailing zeros of the
@@ -12511,7 +12513,7 @@ def kll_quantile(spark, sf_dir):
         "l_returnflag")
     src = DataFrameSource(base, index_column="uid")
     return KLLQuantile(src, "price", k=256, id_column="uid",
-                       by="l_returnflag").plan(spark)
+                       by="l_returnflag").plan(spark, **request)
 
 
 # ring construction shared by the round-12 validity demos: per
@@ -12600,78 +12602,35 @@ def make_valid(spark, sf_dir):
 # SF the bench and oracle run, so the distributed superstep code was
 # correctness-pinned (forced-threshold pytests) but PERFORMANCE-
 # INVISIBLE — a regression there would not move any number.  These
-# lanes re-run the same queries with the thresholds forced to the
-# distributed path: same results (same oracles — the mirrors are
-# bit-identical by construction), distributed plans measured every
-# round.  Additions only; no existing bench entry changed.
+# lanes re-run the same queries with the request key
+# ``driver_threshold=0``, which forces every gate onto the distributed
+# path: same results (same oracles — the mirrors are bit-identical by
+# construction), distributed plans measured every round.
 # --------------------------------------------------------------------------
 
 
-def _dist_lane(base, setters):
-    """Run ``QUERIES[base]`` with the listed (cls, attr) thresholds
-    forced to the distributed path for the duration of the BUILD (the
-    probes run at build time; the returned plan stays distributed)."""
+def _dist_lane(base):
+    """Run ``QUERIES[base]`` with the request key ``driver_threshold=0``,
+    which sends every bounded driver gate in its build onto the
+    distributed path."""
     def run(spark, sf_dir):
-        saved = [(cls, attr, getattr(cls, attr))
-                 for cls, attr in setters()]
-        try:
-            for cls, attr, _ in saved:
-                setattr(cls, attr, -1 if attr != "GROUP_THRESHOLD"
-                        else 0)
-            return QUERIES[base](spark, sf_dir)
-        finally:
-            for cls, attr, old in saved:
-                setattr(cls, attr, old)
+        return QUERIES[base](spark, sf_dir, driver_threshold=0)
     return run
 
 
-def _sieve_setters():
-    from dask_geomodeling_spark.raster.components import (
-        RasterComponents, SieveFilter)
-    return [(SieveFilter, "DRIVER_CELL_THRESHOLD"),
-            (RasterComponents, "DRIVER_CELL_THRESHOLD")]
-
-
-def _components_setters():
-    from dask_geomodeling_spark.raster.components import RasterComponents
-    return [(RasterComponents, "DRIVER_CELL_THRESHOLD")]
-
-
-def _hydrology_setters():
-    from dask_geomodeling_spark.raster.hydrology import FlowAccumulation
-    return [(FlowAccumulation, "DRIVER_THRESHOLD")]
-
-
-def _dbscan_setters():
-    from dask_geomodeling_spark.geometry.spatial_join import ClusterDBSCAN
-    from dask_geomodeling_spark.pipeline.dedup import DedupClusters
-    return [(ClusterDBSCAN, "DRIVER_THRESHOLD"),
-            (DedupClusters, "STAR_DRIVER_THRESHOLD")]
-
-
-def _kll_setters():
-    from dask_geomodeling_spark.pipeline.text import KLLQuantile
-    return [(KLLQuantile, "GROUP_THRESHOLD")]
-
-
-def _star_setters():
-    from dask_geomodeling_spark.pipeline.dedup import DedupClusters
-    return [(DedupClusters, "STAR_DRIVER_THRESHOLD")]
-
-
 demo("sieve_filter_dist", oracle=ORACLES["sieve_filter"])(
-    _dist_lane("sieve_filter", _sieve_setters))
+    _dist_lane("sieve_filter"))
 demo("raster_components_dist", oracle=ORACLES["raster_components"])(
-    _dist_lane("raster_components", _components_setters))
+    _dist_lane("raster_components"))
 demo("flow_accumulation_dist", oracle=ORACLES["flow_accumulation"])(
-    _dist_lane("flow_accumulation", _hydrology_setters))
+    _dist_lane("flow_accumulation"))
 demo("dbscan_clusters_dist", oracle=ORACLES["dbscan_clusters"])(
-    _dist_lane("dbscan_clusters", _dbscan_setters))
+    _dist_lane("dbscan_clusters"))
 demo("kll_quantile_dist", oracle=ORACLES["kll_quantile"])(
-    _dist_lane("kll_quantile", _kll_setters))
+    _dist_lane("kll_quantile"))
 demo("cluster_representative_dist",
      oracle=ORACLES["cluster_representative"])(
-    _dist_lane("cluster_representative", _star_setters))
+    _dist_lane("cluster_representative"))
 
 
 # --------------------------------------------------------------------------

@@ -29,6 +29,10 @@ from dask_geomodeling_spark.geometry.base import GeometryBlock
 
 __all__ = ["SpatialJoin", "NearestJoin", "ClusterDBSCAN"]
 
+#: point count at or below which ClusterDBSCAN runs its exact driver
+#: mirror (the request's ``driver_threshold`` overrides it)
+DRIVER_POINTS = 20000
+
 
 def _pair_leftover(lr, rr):
     """Kernel: the part of the LEFT geometry outside the right ring
@@ -466,12 +470,15 @@ class ClusterDBSCAN(GeometryBlock):
     shape) so every eps-pair meets in EXACTLY one equi-join on
     (cell_x, cell_y) — never data×data; one count aggregation marks
     cores; the core-core edge set runs the DedupClusters star rounds
-    (O(log²) rounds, driver union-find short-circuit under 64k
-    edges); border attachment is one struct-min argmin.  An eps-ball
-    with k points produces O(k²) candidate pairs — DBSCAN's inherent
-    density cost; at 100 TB pick eps against the data density (the
-    same contract PostGIS ships with), and AQE's skew-join handles
-    hot cells.
+    (O(log²) rounds, driver union-find short-circuit at or below
+    ``dedup.STAR_DRIVER_EDGES`` edges); border attachment is one
+    struct-min argmin.  An eps-ball with k points produces O(k²)
+    candidate pairs — DBSCAN's inherent density cost; at 100 TB pick
+    eps against the data density (the same contract PostGIS ships
+    with), and AQE's skew-join handles hot cells.  Point sets of at
+    most ``DRIVER_POINTS`` points (the request's ``driver_threshold``
+    overrides it) run an exact driver mirror of the same semantics
+    instead.
 
     Cache lifecycle: each ``plan()`` eagerly checkpoints ONE narrow
     (id, cluster_id, is_core) label table that the returned plan
@@ -483,10 +490,8 @@ class ClusterDBSCAN(GeometryBlock):
     long-lived sessions.
     """
 
-    DRIVER_THRESHOLD = 20000
-
     def __init__(self, source, eps, min_points, id_column=None,
-                 max_iter=20, driver_threshold=None):
+                 max_iter=20):
         if not isinstance(source, GeometryBlock):
             raise TypeError("source must be a GeometryBlock")
         e = float(eps)
@@ -502,9 +507,7 @@ class ClusterDBSCAN(GeometryBlock):
                 "column(s) {} collide with ClusterDBSCAN's output; "
                 "rename upstream".format(sorted(clash)))
         super().__init__(source, e, int(min_points), str(id_column),
-                         int(max_iter),
-                         None if driver_threshold is None
-                         else int(driver_threshold))
+                         int(max_iter))
 
     @property
     def source(self):
@@ -520,25 +523,23 @@ class ClusterDBSCAN(GeometryBlock):
 
     def _build(self, ctx):
         from dask_geomodeling_spark.pipeline.dedup import DedupClusters
-        _, eps, min_points, idc, max_iter, driver_threshold = self.args
-        if driver_threshold is None:
-            driver_threshold = self.DRIVER_THRESHOLD
+        _, eps, min_points, idc, max_iter = self.args
         df = self.source._build(ctx)
         if not {"x", "y"} <= set(df.columns):
             raise ValueError("ClusterDBSCAN needs point x/y columns")
         # r15 optimization (guide §2.6): the grid-join/star machinery
         # costs ~30 Spark jobs of pure scheduling floor on small point
-        # sets.  Single-pass probe+collect (the _collect_cells rule:
-        # LocalLimit early-stops the scan for data-sized inputs); at
-        # or below the threshold an exact driver mirror of the SAME
-        # pair/core/star/argmin semantics replaces the machinery.
+        # sets.  At or below DRIVER_POINTS points (the request's
+        # driver_threshold overrides it) an exact driver mirror of the
+        # SAME pair/core/star/argmin semantics replaces the machinery.
         # Guards keep the distributed path wherever Python and Spark
         # comparison semantics could diverge: NULL/NaN coordinates
         # (FLOOR(NULL) join-drops; Spark orders NaN above numbers),
         # NULL or duplicate ids (the mirror keys by id).
-        probe = (df.select(F.col(idc).alias("_pid"), "x", "y")
-                 .limit(driver_threshold + 1).collect())
-        bounded = len(probe) <= driver_threshold
+        probe = ctx.collect_bounded(
+            df.select(F.col(idc).alias("_pid"), "x", "y"),
+            DRIVER_POINTS)
+        bounded = probe is not None
         if bounded:
             seen = set()
             for r in probe:
@@ -615,7 +616,7 @@ class ClusterDBSCAN(GeometryBlock):
                   .select(F.least("_pid", "_rid").alias("_lo"),
                           F.greatest("_pid", "_rid").alias("_hi"))
                   .distinct())
-            labels = DedupClusters._star_labels(cc, max_iter)
+            labels = DedupClusters._star_labels(ctx, cc, max_iter)
             core_lab = (core.join(
                 labels.select(F.col("_id").alias("_pid"), "_lbl"),
                 "_pid", "left")

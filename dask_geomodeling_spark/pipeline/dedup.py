@@ -25,6 +25,14 @@ __all__ = ["ExactDedup", "MinHashLSH", "SimHash", "NgramJaccard",
            "ngram_regex_expr", "RepeatedSpans", "RemoveRepeatedSpans",
            "FingerprintTableSink"]
 
+#: edge count at or below which connected components (the star
+#: rounds of DedupClusters, RasterComponents, SieveFilter and
+#: ClusterDBSCAN) label driver-side with an exact union-find — ~1 MB of
+#: pairs replaces ~6 s of per-round scheduling floor on tiny graphs,
+#: while anything data-sized keeps the O(log²)-round distributed path;
+#: the request's ``driver_threshold`` overrides it
+STAR_DRIVER_EDGES = 65536
+
 # 31-bit Mersenne prime: (a*h + b) stays < 2^62 under ANSI overflow checks
 MERSENNE = (1 << 31) - 1
 
@@ -1002,7 +1010,10 @@ class DedupClusters(Block):
     converges in ~20 rounds where propagation needs 10⁶) and per-node
     degree concentrates on component minima only at the very end.
     Same fixpoint, identical output; the driver only ever sees
-    converged-or-not counts.
+    converged-or-not counts.  Star graphs of at most
+    ``STAR_DRIVER_EDGES`` edges (the request's ``driver_threshold``
+    overrides the bound) label with an exact driver union-find
+    instead.
 
     Args:
       source: block of all documents (id column = its index).
@@ -1036,29 +1047,17 @@ class DedupClusters(Block):
     def columns(self):
         return {"doc_id", "cluster_id", "is_canonical"}
 
-    #: edge-count at or below which connected components label
-    #: driver-side (exact union-find) instead of running the
-    #: distributed star rounds — the k×dim-model-collect class of
-    #: bounded materialization: ~1 MB of pairs replaces ~6 s of
-    #: per-round scheduling floor on tiny graphs, while anything
-    #: data-sized keeps the O(log²)-round distributed path
-    STAR_DRIVER_THRESHOLD = 65536
-
     @staticmethod
-    def _star_labels(und, max_iter, driver_threshold=None):
+    def _star_labels(ctx, und, max_iter):
         """Alternating large-star/small-star until the undirected
         canonical pair set is stable; returns (node, min-neighbor)
         pairs of the final star graphs.  Graphs with at most
-        ``driver_threshold`` edges short-circuit to an exact
-        driver-side union-find with identical labels."""
-        if driver_threshold is None:
-            driver_threshold = DedupClusters.STAR_DRIVER_THRESHOLD
-        und = und.persist()
-        und_cnt = und.count()
-        if und_cnt <= driver_threshold:
+        ``STAR_DRIVER_EDGES`` edges (the request's ``driver_threshold``
+        overrides it) short-circuit to an exact driver-side union-find
+        with identical labels."""
+        rows = ctx.collect_bounded(und, STAR_DRIVER_EDGES)
+        if rows is not None:
             import pyspark.sql.types as T
-            rows = und.collect()
-            und.unpersist()
             parent = {}
 
             def find(a):
@@ -1086,11 +1085,15 @@ class DedupClusters(Block):
             # has no size statistics, so every downstream join against
             # it planned as a full SortMergeJoin (two exchanges + two
             # sorts of the data side).  The frame is bounded by
-            # driver_threshold (<= 2·64k narrow rows), so hint it —
+            # the gate (<= 2·64k narrow rows by default), so hint it —
             # nodes/core joins become BroadcastHashJoin with zero
             # data-side exchanges.
             return F.broadcast(spark.createDataFrame(
                 [(n, mins[find(n)]) for n in sorted(nodes)], schema))
+        # the count materializes the cache before round 1 plans, so
+        # the round's joins see its size
+        und = und.persist()
+        und_cnt = und.count()
         for _ in range(max_iter):
             sym = und.select(F.col("_lo").alias("_u"),
                              F.col("_hi").alias("_v")).union(
@@ -1120,8 +1123,6 @@ class DedupClusters(Block):
             # sets of equal size with one-directional containment are
             # equal — one exceptAll probe instead of two, and the size
             # rides the count we already track round-over-round
-            if und_cnt is None:
-                und_cnt = und.count()
             new_cnt = new_und.count()
             stable = (new_cnt == und_cnt
                       and new_und.exceptAll(und).limit(1).count() == 0)
@@ -1165,7 +1166,7 @@ class DedupClusters(Block):
                                 F.greatest("id_a", "id_b").alias("_hi"))
                        .filter(F.col("_lo") != F.col("_hi"))
                        .distinct())
-            got = self._star_labels(und, max_iter)
+            got = self._star_labels(ctx, und, max_iter)
             labels = (nodes.join(got, "_id", "left")
                       .select("_id", F.coalesce("_lbl", "_id")
                               .alias("_lbl")))

@@ -119,12 +119,16 @@ class KneserNeyPerplexity(BaseSingle):
     where ``c(w1·)`` is the context's bigram-occurrence count,
     ``N1+(w1,·)`` its distinct continuation count, and ``N1+(·,w2)``
     the distinct contexts preceding ``w2``.  Σ_w2 P(w2|w1) = 1 for
-    every seen context (pinned by a pytest).  Unseen contexts (only
-    reachable when scoring a corpus the fit never saw) back off to
-    ``Pcont`` alone.
+    every seen context (pinned by a pytest).  The corpus is scored
+    with the model fit on it, so every scored bigram is seen; a
+    bigram absent from the model (reachable only if the scoring
+    stream differed from the fit stream) would get probability 0.0,
+    not a ``Pcont`` backoff — its one left join onto the model table
+    misses ``N1+(·,w2)`` too.
 
-    Same Spark shape as NgramPerplexity: the model is three count
-    DataFrames joined back onto the per-document bigram stream —
+    Same Spark shape as NgramPerplexity: the model is one count
+    table keyed (w1, w2), joined once onto the per-document bigram
+    stream —
     nothing vocabulary-sized reaches the driver; the bigram-type
     total rides a broadcast one-row frame.  Documents with < 2 tokens
     score NULL.

@@ -22,6 +22,12 @@ __all__ = ["TokenCount", "BPETokenCount", "BPETokenize", "BPETrain",
            "KLLQuantile", "BloomFilter", "BloomProbe",
            "CountMinSketch", "HeavyHitters"]
 
+#: KLLQuantile's count-table gate: the per-(group, level) count table
+#: has <= groups*32 rows, so this bounds the driver-side threshold
+#: derivation (and its literal when-chain) to 8192 groups; a
+#: high-cardinality ``by`` takes the distributed derivation instead
+KLL_DRIVER_ROWS = 8192 * 32
+
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
 _LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "is", "in", "that", "it"],
@@ -1126,10 +1132,14 @@ class KLLQuantile(BaseSingle):
     row instead of twice): pass 1 is a map-side groupBy over <=
     groups*32 level keys; pass 2 filters the cached projection to
     <= k rows per group and runs one bounded window over them.
-    Nothing data-sized ever crosses the wire.  The cache is per-build
-    and recomputed from the source every run; a rebuild of the same
-    block unpersists the projection the earlier build left, so
-    rebuilding one block keeps one projection.  A plan whose
+    Nothing data-sized ever crosses the wire: a count table of at
+    most ``KLL_DRIVER_ROWS`` rows (the request's ``driver_threshold``
+    overrides the bound) is collected and the thresholds derive on
+    the driver; a larger one derives them distributed, with the same
+    integer arithmetic.  The cache is per-build and recomputed from
+    the source every run; a rebuild of the same block unpersists the
+    projection the earlier build left, so rebuilding one block keeps
+    one projection.  A plan whose
     projection was unpersisted still runs, re-scanning its source
     without storing it again.  The latest projection of each block is
     retained until the session drops it (long-lived sessions with many
@@ -1150,19 +1160,6 @@ class KLLQuantile(BaseSingle):
 
     _projections = {}   # block token -> its latest hashed projection
     _projections_lock = threading.Lock()
-
-    #: r16 fix (round-15 verdict #1): the driver-side threshold
-    #: derivation collects the per-(group, level) count table, which
-    #: is bounded ONLY by group cardinality (<= groups*32 rows) — a
-    #: high-cardinality ``by`` column would collect millions of rows
-    #: AND build an O(#groups) literal when-chain.  The collect is
-    #: now gated by ``limit(GROUP_THRESHOLD*32 + 1)``: at or below
-    #: the bound the driver derivation + literal pass-2 pushdown run
-    #: (the r15 optimization); above it the pre-r15 fully-distributed
-    #: atleast/thr derivation runs instead (same integer arithmetic,
-    #: pinned by test_kll_quantile_distributed_threshold_matches).
-    #: <= 0 forces the distributed path (the pin test's hook).
-    GROUP_THRESHOLD = 8192
 
     def __init__(self, source, column, k=1024,
                  quantiles=(0.25, 0.5, 0.75, 0.9, 0.99),
@@ -1236,13 +1233,13 @@ class KLLQuantile(BaseSingle):
         rows = self._retain(rows)
         # pass 1: per-level row counts — a <= groups*32-key map-side
         # aggregation, the only shuffle of the sketch.  When the count
-        # table is BOUNDED (cardinality-gated, r16: <= GROUP_THRESHOLD
-        # groups — the collect itself is limit-capped so an unexpected
-        # high-cardinality ``by`` can never flood the driver), it
-        # collects driver-side (the k×dim-model-collect class: BM25
-        # stats, HeavyHitters sketch) and the threshold/n_rows
-        # derivation replays the former atleast/thr/min SQL
-        # integer-exactly in Python — r15 optimization: the thr/nrows
+        # table is BOUNDED (at most KLL_DRIVER_ROWS rows, i.e. 8192
+        # groups, or the request's driver_threshold — the gate's
+        # collect is limit-capped so an unexpected high-cardinality
+        # ``by`` can never flood the driver), it collects driver-side
+        # (the k×dim-model-collect class: BM25 stats, HeavyHitters
+        # sketch) and the threshold/n_rows derivation replays the
+        # former atleast/thr/min SQL integer-exactly in Python — r15 optimization: the thr/nrows
         # DataFrame subtrees each re-executed the scan + Mersenne hash
         # chain, so the plan scanned (and hashed) the source THREE
         # times; now exactly the two documented passes remain (guide
@@ -1251,13 +1248,7 @@ class KLLQuantile(BaseSingle):
         # derivation below runs (same arithmetic, never collects).
         cnt_df = (rows.groupBy(*grp, "_tz")
                   .agg(F.count(F.lit(1)).alias("_cnt")))
-        gthr = self.GROUP_THRESHOLD
-        cnts = None
-        if gthr > 0:
-            cap = (gthr * 32) if grp else 32
-            got = cnt_df.limit(cap + 1).collect()
-            if len(got) <= cap:
-                cnts = got
+        cnts = ctx.collect_bounded(cnt_df, KLL_DRIVER_ROWS)
         if cnts is None:
             return self._distributed_sketch(ctx, rows, cnt_df, grp,
                                             k, qs)

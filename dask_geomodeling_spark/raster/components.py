@@ -24,6 +24,30 @@ from dask_geomodeling_spark.raster.base import BaseSingle
 __all__ = ["RasterComponents", "SieveFilter", "packed_cells",
            "decode_labels"]
 
+#: cell count at or below which the raster gates (RasterComponents,
+#: SieveFilter and the hydrology family) run their exact driver
+#: mirror instead of the distributed rounds, unless the request's
+#: ``driver_threshold`` says otherwise: the rounds cost several
+#: scheduling barriers each on ~1 MB of cells at bench SFs
+DRIVER_CELLS = 65536
+
+
+def bounded_cells(ctx, frame, nan_column="value"):
+    """The raster driver gate: ``(base, rows)`` when ``frame`` has at
+    most ``DRIVER_CELLS`` (or the request's ``driver_threshold``)
+    non-NULL cells, else ``None``.  ``base`` is the ``time, y, x,
+    value`` frame; ``rows`` carry ``time, _us, y, x, value``, keyed by
+    ``(_us, y, x)`` tuples that order like the packed BIGINT ids.  NaN
+    cell values route to the distributed path unless ``nan_column``
+    is ``None`` (see ``BuildContext.collect_bounded``)."""
+    base = (frame.select("time", "y", "x", "value")
+            .filter(F.col("value").isNotNull()))
+    rows = ctx.collect_bounded(
+        base.select("time", F.expr("unix_micros(time)").alias("_us"),
+                    "y", "x", "value"),
+        DRIVER_CELLS, nan_column=nan_column)
+    return None if rows is None else (base, rows)
+
 
 def packed_cells(ctx, frame, op_name, headroom=1,
                  materialize="persist"):
@@ -159,34 +183,16 @@ class RasterComponents(BaseSingle):
     def columns(self):
         return {"time", "y", "x", "value", "component"}
 
-    #: cell count at or below which labeling runs as an exact
-    #: driver-side union-find (r16, round-15 verdict "next" #6 — the
-    #: SieveFilter / hydrology DRIVER_CELL_THRESHOLD precedent): the
-    #: star rounds cost ~4 scheduling barriers per round on ~1 MB of
-    #: cells at bench SFs, and RasterPolygonize inherits the whole
-    #: chain.  The mirror is bit-identical to the distributed path
-    #: (same min-(time,y,x) canonical member, same NULL drop, same
-    #: '<epoch_us>:<y>:<x>' label) and is pinned by
-    #: test_components_distributed_matches_driver; NaN cell values
-    #: force the distributed path (Spark joins match NaN = NaN,
-    #: Python does not).  <= 0 forces the distributed path.
-    DRIVER_CELL_THRESHOLD = 65536
-
     def _build(self, ctx):
         _, conn, max_iter = self.args
         frame = self.store._build(ctx)
-        thr = RasterComponents.DRIVER_CELL_THRESHOLD
-        if thr > 0:
-            base = (frame.select("time", "y", "x", "value")
-                    .filter(F.col("value").isNotNull()))
-            probe = (base.select(
-                "time", F.expr("unix_micros(time)").alias("_us"),
-                "y", "x", "value")
-                .limit(thr + 1).collect())
-            if (len(probe) <= thr
-                    and not any(r["value"] != r["value"]
-                                for r in probe)):
-                return self._driver_label(ctx, base, probe, conn)
+        # bounded inputs label with an exact driver union-find, pinned
+        # bit-identical to the distributed path (same min-(time,y,x)
+        # canonical member, same NULL drop, same '<epoch_us>:<y>:<x>'
+        # label, same schema) by test_components_distributed_matches_driver
+        got = bounded_cells(ctx, frame)
+        if got is not None:
+            return self._driver_label(ctx, *got, conn)
         return self._label(ctx, frame, conn, max_iter)
 
     @classmethod
@@ -270,7 +276,7 @@ class RasterComponents(BaseSingle):
                         F.greatest("_id", "_idb").alias("_hi")))
             edges = e if edges is None else edges.unionByName(e)
         und = edges.distinct()
-        labels = DedupClusters._star_labels(und, max_iter)
+        labels = DedupClusters._star_labels(ctx, und, max_iter)
         # unpack the winning bigint back to the canonical member's
         # (tidx, y, x) and re-join the (broadcast) time index for the
         # public '<epoch_us>:<y>:<x>' string form
@@ -390,28 +396,13 @@ class SieveFilter(BaseSingle):
     def _build(self, ctx):
         _, threshold, connectivity, iterate, max_rounds = self.args
         frame = self.store._build(ctx)
-        # bounded driver short-circuit for BOTH modes (see
-        # DRIVER_CELL_THRESHOLD): ONE limit(threshold+1) probe decides
-        # AND collects (r16 fix, round-15 advice — the previous
-        # count+isnan aggregation was a FULL extra pass over the
-        # upstream plan on every build, and the bounded case then
-        # evaluated the plan a second time inside the mirror; this is
-        # the hydrology _collect_cells shape: LocalLimit early-stops
-        # data-sized scans, the bounded case pays exactly one
-        # evaluation, and the NaN routing happens in Python on the
-        # collected rows, which are the complete set there); the
-        # driver mirror is pinned bit-identical to the distributed
-        # plans by the two *_matches_driver pytests
-        base = (frame.select("time", "y", "x", "value")
-                .filter(F.col("value").isNotNull()))
-        probe = (base.select("time", F.expr("unix_micros(time)")
-                             .alias("_us"), "y", "x", "value")
-                 .limit(SieveFilter.DRIVER_CELL_THRESHOLD + 1)
-                 .collect())
-        if (len(probe) <= SieveFilter.DRIVER_CELL_THRESHOLD
-                and not any(r["value"] != r["value"] for r in probe)):
+        # bounded driver short-circuit for BOTH modes: the driver
+        # mirror is pinned bit-identical to the distributed plans by
+        # the two *_matches_driver pytests
+        got = bounded_cells(ctx, frame)
+        if got is not None:
             return self._driver_fixpoint(
-                ctx, base, probe, threshold, connectivity,
+                ctx, *got, threshold, connectivity,
                 max_rounds if iterate else 1,
                 uphill=bool(iterate), converge=bool(iterate))
         if not iterate:
@@ -419,17 +410,6 @@ class SieveFilter(BaseSingle):
                                     connectivity)
         return self._iterate_fixpoint(ctx, frame, threshold,
                                       connectivity, max_rounds)
-
-    #: cell count at or below which the iterate fixpoint runs as an
-    #: exact driver-side loop (the DedupClusters STAR_DRIVER_THRESHOLD
-    #: / hydrology driver_threshold precedent): each distributed round
-    #: costs 4 scheduling barriers (label, size, merge, convergence),
-    #: so a tiny raster pays ~seconds of per-job floor for ~1 MB of
-    #: data; anything larger keeps the distributed rounds.  NaN cell
-    #: values force the distributed path (Spark treats NaN = NaN as
-    #: TRUE in joins, Python does not — the driver mirror would
-    #: diverge).
-    DRIVER_CELL_THRESHOLD = 65536
 
     @classmethod
     def _driver_fixpoint(cls, ctx, base, rows, threshold, connectivity,
@@ -602,7 +582,7 @@ class SieveFilter(BaseSingle):
         try:
             for _ in range(max_rounds):
                 cur, changed = SieveFilter._iterate_round(
-                    und, undb, tindex, meta_lits, cur, threshold)
+                    ctx, und, undb, tindex, meta_lits, cur, threshold)
                 if changed == 0:
                     break
             else:
@@ -628,7 +608,8 @@ class SieveFilter(BaseSingle):
         return cur.select("time", "y", "x", "value")
 
     @staticmethod
-    def _iterate_round(und, undb, tindex, meta_lits, cur, threshold):
+    def _iterate_round(ctx, und, undb, tindex, meta_lits, cur,
+                       threshold):
         """One merge round: returns ``(next_cur, changed)`` with the
         previous round's ``cur`` and this round's ``labj``
         checkpoints already unpersisted (their content lives on in
@@ -643,7 +624,7 @@ class SieveFilter(BaseSingle):
         edges = (adj.filter(F.col("_va") == F.col("_vb"))
                  .select(F.least("_ida", "_idb").alias("_lo"),
                          F.greatest("_ida", "_idb").alias("_hi")))
-        labels = DedupClusters._star_labels(edges, 20)
+        labels = DedupClusters._star_labels(ctx, edges, 20)
         lab = (cur.select("_id", "value")
                .join(labels, "_id", "left")
                .withColumn("_l", F.coalesce("_lbl", "_id"))

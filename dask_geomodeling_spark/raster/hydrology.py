@@ -15,10 +15,11 @@ subtree sizes — computed WITHOUT per-path iteration by an Euler tour
 of the forest plus pointer-doubling list ranking: O(log n) self-join
 rounds regardless of river length (a continent-long river needs ~40
 rounds, not 10⁶), the same convergence class as the
-RasterComponents/DedupClusters star machinery.  Graphs at or below
-``driver_threshold`` edges short-circuit to an exact driver-side
-traversal (the DedupClusters precedent, pipeline/dedup.py) so small
-requests skip the round overhead entirely.
+RasterComponents/DedupClusters star machinery.  Rasters with at most
+``components.DRIVER_CELLS`` data cells (the request's
+``driver_threshold`` overrides it) short-circuit to an exact
+driver-side traversal, so small requests skip the round overhead
+entirely.
 """
 
 from __future__ import annotations
@@ -27,6 +28,8 @@ from pyspark.sql import functions as F
 
 from dask_geomodeling_spark.raster.base import (BaseSingle,
                                                 RasterBlock)
+from dask_geomodeling_spark.raster.components import (DRIVER_CELLS,
+                                                      bounded_cells)
 
 __all__ = ["FlowDirection", "FlowAccumulation",
            "FlowLength", "Watershed", "StreamOrder", "CostDistance",
@@ -109,38 +112,14 @@ _CODE_DECODE = {float(code): (dy, dx, float(dy * dy + dx * dx) ** 0.5)
                 for dy, dx, code in D8_CODES}
 
 
-def _collect_cells(ctx, store, threshold, check_nan=False):
-    """Bounded-cell driver fast-path probe (r15 optimization, the
-    SieveFilter.DRIVER_CELL_THRESHOLD shape): count the store's data
-    cells; at or below ``threshold`` collect them and return
-    ``(base, rows)`` where rows carry ``time, _us, y, x, value`` —
-    the whole packed-id/edge-join machinery (a ~12-job checkpoint +
-    a ~6-job edge count at the bench SF) is skipped and the op's
-    exact driver walk runs on ``(us, y, x)`` tuple keys, which order
-    identically to the packed BIGINT ids.  Returns ``None`` for
-    data-sized inputs (the distributed path, with its own
-    edges-count driver gate, is unchanged).  ``check_nan=True``
-    additionally routes any NaN cell value to the distributed path
-    (CostDistance's ``value > 0`` traversability test: Spark orders
-    NaN above every number, Python does not)."""
-    base = (store._build(ctx)
-            .select("time", "y", "x", "value")
-            .filter(F.col("value").isNotNull()))
-    # single-pass probe+collect: LocalLimit stops each scan task
-    # after threshold+1 rows, so the data-sized case pays an
-    # early-stopping partial pass — and the bounded case pays exactly
-    # ONE evaluation of the upstream plan (the probe IS the collect;
-    # a separate count probe re-executed the whole upstream store —
-    # FlowDirection here — once more per gate)
-    rows = (base.select("time",
-                        F.expr("unix_micros(time)").alias("_us"),
-                        "y", "x", "value")
-            .limit(threshold + 1).collect())
-    if len(rows) > threshold:
-        return None
-    if check_nan and any(r["value"] != r["value"] for r in rows):
-        return None
-    return base, rows
+def _count_schema(base):
+    """The output schema of FlowAccumulation, FlowLength and
+    StreamOrder: ``base``'s time/y/x fields and a non-nullable
+    ``value`` — the distributed paths emit it through ``coalesce``
+    with a literal, so the driver mirrors declare it the same way."""
+    import pyspark.sql.types as T
+    return T.StructType(base.schema.fields[:3] + [
+        T.StructField("value", T.DoubleType(), False)])
 
 
 def _py_flow_edges(cells):
@@ -347,13 +326,13 @@ class FlowAccumulation(BaseSingle):
     than looping.
 
     Execution: the flow graph is a functional in-forest, so upstream
-    counts are subtree sizes.  (1) Build child→parent edges by
-    decoding the codes (one broadcast join).  (2) At or below
-    ``driver_threshold`` edges, collect the edge list and count
-    subtree sizes exactly on the driver (the DedupClusters
-    short-circuit, pipeline/dedup.py:767).  (3) Otherwise build the
-    forest's Euler tour — per-parent child ordering needs only a
-    window bounded by the D8 in-degree (≤ 8 rows per key) — and
+    counts are subtree sizes.  (1) At or below ``DRIVER_CELLS``
+    direction cells (and weight cells), collect the cells and count
+    subtree sizes exactly on the driver.  (2) Otherwise build
+    child→parent edges by decoding the codes (one broadcast join)
+    and (3) the forest's Euler tour — per-parent child ordering
+    needs only a window bounded by the D8 in-degree (≤ 8 rows per
+    key) — and
     pointer-double the tour's list ranks: ``rank += rank[ptr];
     ptr = ptr[ptr]`` with a ``localCheckpoint`` per round, converging
     in ⌈log₂ 2n⌉ rounds.  Subtree size falls out as
@@ -365,47 +344,39 @@ class FlowAccumulation(BaseSingle):
     overflow 2⁶³ fails fast instead of mislabeling.
     """
 
-    DRIVER_THRESHOLD = 65536
-
-    def __init__(self, store, max_iter=48, driver_threshold=None,
-                 weights=None):
-        from dask_geomodeling_spark.raster.base import RasterBlock
+    def __init__(self, store, max_iter=48, weights=None):
         if int(max_iter) < 1:
             raise ValueError("max_iter must be >= 1")
         if weights is not None and not isinstance(weights, RasterBlock):
             raise TypeError("weights must be a RasterBlock")
-        super().__init__(store, int(max_iter),
-                         None if driver_threshold is None
-                         else int(driver_threshold), weights)
+        super().__init__(store, int(max_iter), weights)
 
     def _build(self, ctx):
-        _, max_iter, driver_threshold, weights = self.args
-        if driver_threshold is None:
-            driver_threshold = self.DRIVER_THRESHOLD
-        spark = ctx.spark
-        got = _collect_cells(ctx, self.store, driver_threshold)
+        _, max_iter, weights = self.args
+        got = bounded_cells(ctx, self.store._build(ctx), nan_column=None)
         if got is not None:
-            # r16 fix (round-15 advice): the direction-raster probe
-            # bounds only the direction cells — a data-sized WEIGHTS
-            # raster paired with a tiny direction raster must not be
-            # collected.  Probe the weights with the same
-            # limit(threshold+1) early-stop; unbounded weights fall
-            # through to the distributed path (which joins weights
-            # onto the bounded node set before anything collects).
+            # the direction-raster gate bounds only the direction
+            # cells: a data-sized WEIGHTS raster paired with a tiny
+            # direction raster must not be collected, so the weights
+            # pass the same gate; unbounded weights fall through to
+            # the distributed path
             wrows = None
             if weights is not None:
-                wrows = (weights._build(ctx)
-                         .filter(F.col("value").isNotNull())
-                         .select(F.expr("unix_micros(time)")
-                                 .alias("_us"), "y", "x",
-                                 F.col("value").cast(_WT_DECIMAL)
-                                 .alias("_wt"))
-                         .limit(driver_threshold + 1).collect())
-            if weights is None or len(wrows) <= driver_threshold:
+                wrows = ctx.collect_bounded(
+                    weights._build(ctx)
+                    .filter(F.col("value").isNotNull())
+                    .select(F.expr("unix_micros(time)").alias("_us"),
+                            "y", "x",
+                            F.col("value").cast(_WT_DECIMAL)
+                            .alias("_wt")),
+                    DRIVER_CELLS)
+            if weights is None or wrows is not None:
                 return self._driver_fast(ctx, got, wrows)
         nodes, _tindex, edges = _flow_graph(
             ctx, self.store, "FlowAccumulation")
-        if weights is not None:
+        if weights is None:
+            acc = self._euler_counts(nodes, edges, max_iter)
+        else:
             # ESRI weight-raster accumulation: upstream SUM of the
             # weight raster instead of upstream cell count; missing
             # or NULL weight cells contribute 0.  Weights quantize
@@ -422,21 +393,11 @@ class FlowAccumulation(BaseSingle):
                        .select("time", "y", "x", "_id",
                                F.coalesce("_wt", F.lit(0.0))
                                .cast(_WT_DECIMAL).alias("_wt")))
-        n_edges = edges.count()
-        if n_edges <= driver_threshold:
-            if weights is None:
-                acc = self._driver_counts(spark, edges)
-            else:
-                acc = self._driver_weighted(spark, edges, nodes_w)
-        elif weights is None:
-            acc = self._euler_counts(nodes, edges, max_iter)
-        else:
             acc = self._euler_weighted(nodes, nodes_w, edges,
                                        max_iter)
-        # acc is either driver literals or derived from checkpointed
-        # ranking frames — the edge cache has no further consumer
-        # (round-10 review fix; nodes stays cached: the returned plan
-        # joins onto it, the RasterComponents convention)
+        # acc derives from checkpointed ranking frames — the edge
+        # cache has no further consumer (nodes stays cached: the
+        # returned plan joins onto it, the RasterComponents convention)
         edges.unpersist()
         out = (nodes.join(acc, "_id", "left")
                .select("time", "y", "x",
@@ -446,14 +407,13 @@ class FlowAccumulation(BaseSingle):
 
     @staticmethod
     def _driver_fast(ctx, got, wrows):
-        """Bounded-cell fast path (see ``_collect_cells``): the exact
-        ``_driver_counts`` / ``_driver_weighted`` walks on tuple keys,
-        straight from the collected direction raster — no packed ids,
-        no edge join, no final join.  Pinned bit-identical to the
-        machinery paths by test_hydrology_fast_path_matches_machinery.
-        ``wrows`` is the ALREADY-BOUNDED collected weights projection
-        (r16: the caller probes it with ``limit(threshold+1)`` so a
-        data-sized weights raster can never reach the driver), or
+        """Bounded-cell fast path (see ``bounded_cells``): exact
+        subtree counts or weight sums on tuple keys, straight from the
+        collected direction raster — no packed ids, no edge join, no
+        final join.  Pinned bit-identical to the Euler paths by
+        test_hydrology_fast_path_matches_machinery.  ``wrows`` is the
+        ALREADY-BOUNDED collected weights projection (the caller's
+        gate keeps a data-sized weights raster off the driver), or
         ``None`` for the unweighted walk."""
         base, rows = got
         cells = {(r["_us"], r["y"], r["x"]): r["value"] for r in rows}
@@ -471,11 +431,16 @@ class FlowAccumulation(BaseSingle):
             out = [(times[us], y, x,
                     float(acc.get((us, y, x), 1) - 1))
                    for (us, y, x) in sorted(cells)]
-            return ctx.spark.createDataFrame(out, base.schema)
+            return ctx.spark.createDataFrame(out, _count_schema(base))
         # weighted: the weights arrived quantized through the SAME
         # Spark cast the distributed path uses (collected as
-        # DECIMAL(28,9) by the caller's bounded probe), then the
-        # _driver_weighted unscaled-integer walk verbatim
+        # DECIMAL(28,9) by the caller's bounded probe); the walk sums
+        # the scale-9 UNSCALED integers (python ints — exact at any
+        # magnitude) and converts to double once per cell via
+        # ``Decimal.scaleb``, the identical correctly-rounded value
+        # Spark's DECIMAL→DOUBLE cast gives on the distributed path.
+        # 60 digits: scaleb must NEVER round (the default context's 28
+        # would)
         from decimal import Context, Decimal
         dctx = Context(prec=60)
         wmap = {(r["_us"], r["y"], r["x"]):
@@ -494,64 +459,7 @@ class FlowAccumulation(BaseSingle):
             val = float(Decimal(d).scaleb(-9, context=dctx)) \
                 if d != 0 else 0.0
             out.append((times[us], y, x, val))
-        return ctx.spark.createDataFrame(out, base.schema)
-
-    @staticmethod
-    def _driver_weighted(spark, edges, nodes_w):
-        """Exact upstream weight sums on the driver for small graphs.
-
-        ``nodes_w._wt`` arrives pre-quantized to DECIMAL(28,9); the
-        walk sums the scale-9 UNSCALED integers (python ints — exact
-        at any magnitude, no Decimal-context rounding), then converts
-        to double once per node via ``Decimal.scaleb`` — the identical
-        correctly-rounded value Spark's DECIMAL→DOUBLE cast produces
-        on the distributed path."""
-        from decimal import Context, Decimal
-
-        # 60 digits: scaleb must NEVER round (the default context's
-        # 28 would); sums of ≤ 2^16 DECIMAL(28,9) values stay ≤ 33
-        # digits, float(Decimal) itself is context-independent and
-        # correctly rounded
-        ctx = Context(prec=60)
-        rows = edges.collect()
-        _, children, post_orders = _driver_forest(
-            rows, "FlowAccumulation")
-        # weights only for nodes on an edge (≤ 2·threshold rows) —
-        # semi-join, never an isin literal list
-        ids = (edges.select(F.col("_c").alias("_id"))
-               .unionByName(edges.select(F.col("_p").alias("_id")))
-               .distinct())
-        wt = {r["_id"]: int(r["_wt"].scaleb(9, context=ctx)) for r in
-              nodes_w.join(ids, "_id", "left_semi")
-              .select("_id", "_wt").collect()}
-        acc = {}
-        for post in post_orders:
-            for v in reversed(post):
-                acc[v] = wt.get(v, 0) + sum(
-                    acc[w] for w in children.get(v, ()))
-        out = [(int(k),
-                float(Decimal(v - wt.get(k, 0)).scaleb(-9,
-                                                       context=ctx)))
-               for k, v in acc.items() if v != wt.get(k, 0)]
-        return spark.createDataFrame(
-            out, "_id bigint, _acc double") if out else \
-            spark.createDataFrame([], "_id bigint, _acc double")
-
-    @staticmethod
-    def _driver_counts(spark, edges):
-        """Exact subtree sizes on the driver for small graphs."""
-        rows = edges.collect()
-        _, children, post_orders = _driver_forest(
-            rows, "FlowAccumulation")
-        acc = {}
-        for post in post_orders:
-            for v in reversed(post):
-                acc[v] = 1 + sum(acc[w] for w in children.get(v, ()))
-        out = [(int(k), float(v - 1)) for k, v in acc.items()
-               if v > 1]
-        return spark.createDataFrame(
-            out, "_id bigint, _acc double") if out else \
-            spark.createDataFrame([], "_id bigint, _acc double")
+        return ctx.spark.createDataFrame(out, _count_schema(base))
 
     @staticmethod
     def _euler_tour(nodes, edges):
@@ -652,8 +560,8 @@ class FlowLength(BaseSingle):
 
     Execution: pointer doubling on the flow forest — each round one
     self-join on the packed BIGINT key, converging in ⌈log₂ depth⌉
-    rounds regardless of river length; ≤ ``driver_threshold`` edges
-    short-circuit to an exact memoized driver walk.
+    rounds regardless of river length; at most ``DRIVER_CELLS``
+    cells short-circuit to an exact memoized driver walk.
 
     Every path length is exactly ``a·1 + b·√2`` — BOTH paths carry
     the (straight, diagonal) BIGINT step counts (exact under any
@@ -662,59 +570,19 @@ class FlowLength(BaseSingle):
     (§6-11; the round-13 verdict falsified the previous raw-DOUBLE
     ``d + d[ptr]`` doubling by 1 ulp against the driver walk)."""
 
-    DRIVER_THRESHOLD = 65536
-
-    def __init__(self, store, max_iter=48, driver_threshold=None):
+    def __init__(self, store, max_iter=48):
         if int(max_iter) < 1:
             raise ValueError("max_iter must be >= 1")
-        super().__init__(store, int(max_iter),
-                         None if driver_threshold is None
-                         else int(driver_threshold))
+        super().__init__(store, int(max_iter))
 
     def _build(self, ctx):
-        _, max_iter, driver_threshold = self.args
-        if driver_threshold is None:
-            driver_threshold = self.DRIVER_THRESHOLD
-        spark = ctx.spark
-        got = _collect_cells(ctx, self.store, driver_threshold)
+        _, max_iter = self.args
+        got = bounded_cells(ctx, self.store._build(ctx), nan_column=None)
         if got is not None:
             return self._driver_fast(ctx, got)
         nodes, _tindex, edges = _flow_graph(ctx, self.store,
                                             "FlowLength")
-        if edges.count() <= driver_threshold:
-            rows = edges.collect()
-            # (parent, diagonal?) — step counts stay integers so the
-            # walk order can't perturb the float result (§6-11)
-            nxt = {r["_c"]: (r["_p"], r["_w"] != 1.0) for r in rows}
-            memo = {}
-
-            def steps(u):
-                path, on_path = [], set()
-                while u in nxt and u not in memo:
-                    if u in on_path:
-                        raise ValueError(
-                            "FlowLength: direction raster contains "
-                            "a cycle")
-                    path.append(u)
-                    on_path.add(u)
-                    u = nxt[u][0]
-                a, b = memo.get(u, (0, 0))
-                for v in reversed(path):
-                    if nxt[v][1]:
-                        b += 1
-                    else:
-                        a += 1
-                    memo[v] = (a, b)
-
-            for u in nxt:
-                steps(u)
-            out = [(int(k), float(a) + float(b) * _SQRT2)
-                   for k, (a, b) in memo.items()]
-            lens = spark.createDataFrame(
-                out, "_id bigint, _len double") if out else \
-                spark.createDataFrame([], "_id bigint, _len double")
-        else:
-            lens = self._double_lengths(edges, max_iter)
+        lens = self._double_lengths(edges, max_iter)
         edges.unpersist()
         return (nodes.join(lens, "_id", "left")
                 .select("time", "y", "x",
@@ -724,7 +592,7 @@ class FlowLength(BaseSingle):
     @staticmethod
     def _driver_fast(ctx, got):
         """Bounded-cell fast path: the exact memoized (straight,
-        diagonal)-count walk on tuple keys (see ``_collect_cells``)."""
+        diagonal)-count walk on tuple keys (see ``bounded_cells``)."""
         base, rows = got
         cells = {(r["_us"], r["y"], r["x"]): r["value"] for r in rows}
         times = {r["_us"]: r["time"] for r in rows}
@@ -757,7 +625,7 @@ class FlowLength(BaseSingle):
             ab = memo.get((us, y, x))
             val = float(ab[0]) + float(ab[1]) * _SQRT2 if ab else 0.0
             out.append((times[us], y, x, val))
-        return ctx.spark.createDataFrame(out, base.schema)
+        return ctx.spark.createDataFrame(out, _count_schema(base))
 
     @staticmethod
     def _double_lengths(edges, max_iter):
@@ -795,60 +663,26 @@ class Watershed(BaseSingle):
 
     Execution: pure pointer doubling — ``lab ← lab[lab]`` per round
     (labels start at the parent, sinks label themselves), fixpoint in
-    ⌈log₂ depth⌉ self-join rounds; ≤ ``driver_threshold`` edges
+    ⌈log₂ depth⌉ self-join rounds; at most ``DRIVER_CELLS`` cells
     short-circuit to a path-compressed driver walk."""
 
-    DRIVER_THRESHOLD = 65536
-
-    def __init__(self, store, max_iter=48, driver_threshold=None):
+    def __init__(self, store, max_iter=48):
         if int(max_iter) < 1:
             raise ValueError("max_iter must be >= 1")
-        super().__init__(store, int(max_iter),
-                         None if driver_threshold is None
-                         else int(driver_threshold))
+        super().__init__(store, int(max_iter))
 
     @property
     def columns(self):
         return {"time", "y", "x", "value", "catchment"}
 
     def _build(self, ctx):
-        _, max_iter, driver_threshold = self.args
-        if driver_threshold is None:
-            driver_threshold = self.DRIVER_THRESHOLD
-        spark = ctx.spark
-        got = _collect_cells(ctx, self.store, driver_threshold)
+        _, max_iter = self.args
+        got = bounded_cells(ctx, self.store._build(ctx), nan_column=None)
         if got is not None:
             return self._driver_fast(ctx, got)
         nodes, tindex, edges = _flow_graph(ctx, self.store,
                                            "Watershed")
-        if edges.count() <= driver_threshold:
-            rows = edges.collect()
-            parent = {r["_c"]: r["_p"] for r in rows}
-            root = {}
-
-            def find(u):
-                path, on_path = [], set()
-                while u in parent and u not in root:
-                    if u in on_path:
-                        raise ValueError(
-                            "Watershed: direction raster contains "
-                            "a cycle")
-                    path.append(u)
-                    on_path.add(u)
-                    u = parent[u]
-                r = root.get(u, u)
-                for v in path:
-                    root[v] = r
-                return r
-
-            for u in parent:
-                find(u)
-            out = [(int(k), int(v)) for k, v in root.items()]
-            labs = spark.createDataFrame(
-                out, "_id bigint, _l bigint") if out else \
-                spark.createDataFrame([], "_id bigint, _l bigint")
-        else:
-            labs = self._double_labels(nodes, edges, max_iter)
+        labs = self._double_labels(nodes, edges, max_iter)
         edges.unpersist()
         from dask_geomodeling_spark.raster.components import (
             decode_labels)
@@ -861,7 +695,8 @@ class Watershed(BaseSingle):
     def _driver_fast(ctx, got):
         """Bounded-cell fast path: the exact path-compressed root
         walk on tuple keys; the catchment string is the same
-        '<epoch_us>:<y>:<x>' decode_labels renders."""
+        '<epoch_us>:<y>:<x>' decode_labels renders, in a non-nullable
+        column like the distributed path's."""
         import pyspark.sql.types as T
         base, rows = got
         cells = {(r["_us"], r["y"], r["x"]): r["value"] for r in rows}
@@ -894,7 +729,7 @@ class Watershed(BaseSingle):
                         "{}:{}:{}".format(*rt)))
         schema = T.StructType(list(base.schema.fields)
                               + [T.StructField("catchment",
-                                               T.StringType())])
+                                               T.StringType(), False)])
         return ctx.spark.createDataFrame(out, schema)
 
     @staticmethod
@@ -983,39 +818,27 @@ class StreamOrder(BaseSingle):
     and the loop runs ``max(strahler)`` times — bounded by
     ``log₂(#headwaters) + 1`` (the Amazon is order 12), NOT by river
     length or tree depth.  Total cost: O(order · log n) self-join
-    rounds on 24-byte rows.  At or below ``driver_threshold`` edges
-    the exact post-order traversal runs on the driver (the
+    rounds on 24-byte rows.  At or below ``DRIVER_CELLS`` cells the
+    exact post-order traversal runs on the driver (the
     FlowAccumulation short-circuit); malformed cyclic direction
     rasters fail fast in both paths.
     """
 
-    DRIVER_THRESHOLD = 65536
-
-    def __init__(self, store, max_order=32, max_iter=48,
-                 driver_threshold=None):
+    def __init__(self, store, max_order=32, max_iter=48):
         if int(max_order) < 1:
             raise ValueError("max_order must be >= 1")
         if int(max_iter) < 1:
             raise ValueError("max_iter must be >= 1")
-        super().__init__(store, int(max_order), int(max_iter),
-                         None if driver_threshold is None
-                         else int(driver_threshold))
+        super().__init__(store, int(max_order), int(max_iter))
 
     def _build(self, ctx):
-        _, max_order, max_iter, driver_threshold = self.args
-        if driver_threshold is None:
-            driver_threshold = self.DRIVER_THRESHOLD
-        spark = ctx.spark
-        got = _collect_cells(ctx, self.store, driver_threshold)
+        _, max_order, max_iter = self.args
+        got = bounded_cells(ctx, self.store._build(ctx), nan_column=None)
         if got is not None:
             return self._driver_fast(ctx, got, max_order)
         nodes, _tindex, edges = _flow_graph(ctx, self.store,
                                             "StreamOrder")
-        if edges.count() <= driver_threshold:
-            orders = self._driver_orders(spark, edges, max_order)
-        else:
-            orders = self._euler_orders(nodes, edges, max_order,
-                                        max_iter)
+        orders = self._euler_orders(nodes, edges, max_order, max_iter)
         edges.unpersist()
         return (nodes.join(orders, "_id", "left")
                 .select("time", "y", "x",
@@ -1023,34 +846,9 @@ class StreamOrder(BaseSingle):
                         .alias("value")))
 
     @staticmethod
-    def _driver_orders(spark, edges, max_order):
-        """Exact Strahler by iterative post-order on the driver."""
-        rows = edges.collect()
-        _, children, post_orders = _driver_forest(rows, "StreamOrder")
-        order = {}
-        for post in post_orders:
-            for v in reversed(post):
-                kids = children.get(v, ())
-                if not kids:
-                    order[v] = 1
-                    continue
-                mx = max(order[c] for c in kids)
-                ties = sum(1 for c in kids if order[c] == mx)
-                order[v] = mx + (1 if ties >= 2 else 0)
-        got = max(order.values(), default=1)
-        if got > max_order:
-            raise ValueError(
-                "StreamOrder: order {} exceeds max_order {}"
-                .format(got, max_order))
-        out = [(int(k), float(v)) for k, v in order.items() if v > 1]
-        return spark.createDataFrame(
-            out, "_id bigint, _ord double") if out else \
-            spark.createDataFrame([], "_id bigint, _ord double")
-
-    @staticmethod
     def _driver_fast(ctx, got, max_order):
         """Bounded-cell fast path: the exact post-order Strahler walk
-        on tuple keys (see ``_collect_cells``)."""
+        on tuple keys (see ``bounded_cells``)."""
         base, rows = got
         cells = {(r["_us"], r["y"], r["x"]): r["value"] for r in rows}
         times = {r["_us"]: r["time"] for r in rows}
@@ -1075,7 +873,7 @@ class StreamOrder(BaseSingle):
         out = [(times[us], y, x,
                 float(order.get((us, y, x), 1)))
                for (us, y, x) in sorted(cells)]
-        return ctx.spark.createDataFrame(out, base.schema)
+        return ctx.spark.createDataFrame(out, _count_schema(base))
 
     @staticmethod
     def _euler_orders(nodes, edges, max_order, max_iter):
@@ -1215,14 +1013,12 @@ class CostDistance(RasterBlock):
     the hop-minimal optimal path; the default bound is
     ``2 * (height + width) + 8`` (grid-diameter scale) with a
     FAIL-FAST raise — a labyrinthine cost field that forces longer
-    optimal paths needs an explicit ``max_iter``.  Edge sets at or
-    below ``driver_threshold`` short-circuit to an exact driver
-    Dijkstra (the DedupClusters precedent)."""
+    optimal paths needs an explicit ``max_iter``.  Cost and source
+    rasters of at most ``DRIVER_CELLS`` cells, or edge sets of at most
+    that many edges, short-circuit to an exact driver Dijkstra (the
+    request's ``driver_threshold`` overrides the bound)."""
 
-    DRIVER_THRESHOLD = 65536
-
-    def __init__(self, cost, sources, max_iter=None,
-                 driver_threshold=None):
+    def __init__(self, cost, sources, max_iter=None):
         for blk in (cost, sources):
             if not isinstance(blk, RasterBlock):
                 raise TypeError(
@@ -1230,9 +1026,7 @@ class CostDistance(RasterBlock):
         if max_iter is not None and int(max_iter) < 1:
             raise ValueError("max_iter must be >= 1")
         super().__init__(cost, sources,
-                         None if max_iter is None else int(max_iter),
-                         None if driver_threshold is None
-                         else int(driver_threshold))
+                         None if max_iter is None else int(max_iter))
 
     @property
     def columns(self):
@@ -1248,17 +1042,13 @@ class CostDistance(RasterBlock):
         returns the cost cells joined with the settled ``(_d, _lab)``
         state — minimal accumulated cost and the label of the source
         that provides it (NULL = barrier / unreachable)."""
-        cost_blk, src_blk, max_iter, thr = self.args
-        if thr is None:
-            thr = self.DRIVER_THRESHOLD
+        cost_blk, src_blk, max_iter = self.args
         spark = ctx.spark
-        got = _collect_cells(ctx, cost_blk, thr, check_nan=True)
+        got = bounded_cells(ctx, cost_blk._build(ctx))
         if got is not None:
-            got_src = _collect_cells(ctx, src_blk, thr,
-                                     check_nan=True)
+            got_src = bounded_cells(ctx, src_blk._build(ctx))
             if got_src is not None:
                 return self._driver_fast(ctx, got, got_src)
-            got = None
         from dask_geomodeling_spark.raster.components import (
             packed_cells)
         nodes, _ = packed_cells(ctx, cost_blk._build(ctx),
@@ -1295,8 +1085,9 @@ class CostDistance(RasterBlock):
         from pyspark import StorageLevel
         edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            if edges.count() <= thr:
-                dists = self._driver_dijkstra(spark, seeds, edges)
+            erows = ctx.collect_bounded(edges, DRIVER_CELLS)
+            if erows is not None:
+                dists = self._driver_dijkstra(spark, seeds, erows)
             else:
                 if max_iter is None:
                     b = nodes.select("_dy", "_dx").first()
@@ -1312,7 +1103,7 @@ class CostDistance(RasterBlock):
         """Bounded-cell fast path: edge weights and the Dijkstra heap
         order mirror the machinery exactly — ``dist * (ca + cb) / 2.0``
         in the same IEEE op order, (distance, label) settle order —
-        on tuple keys (see ``_collect_cells``; NaN costs/sources take
+        on tuple keys (see ``bounded_cells``; NaN costs/sources take
         the distributed path)."""
         import heapq
         from collections import defaultdict
@@ -1359,10 +1150,11 @@ class CostDistance(RasterBlock):
 
     @staticmethod
     def _driver_dijkstra(spark, seeds, edges):
+        """Exact Dijkstra over the collected (bounded) edge rows."""
         import heapq
         from collections import defaultdict
         adj = defaultdict(list)
-        for r in edges.collect():
+        for r in edges:
             adj[r["_a"]].append((r["_b"], r["_w"]))
         # heap orders by (distance, label): a distance tie settles
         # with the smallest source label — same rule as the BF path

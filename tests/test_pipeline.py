@@ -1665,11 +1665,11 @@ def test_kll_quantile_error_vs_exact_percentile(spark):
 
 def test_kll_quantile_distributed_threshold_matches(spark):
     """r16 pin (round-15 verdict #1): the high-group-cardinality
-    fallback — GROUP_THRESHOLD forced to 0 so the driver collect and
-    literal when-chain are skipped and the distributed atleast/thr
+    fallback — the request key driver_threshold=0 skips the driver
+    collect and literal when-chain so the distributed atleast/thr
     derivation runs — returns EXACTLY the default (driver-derived)
-    path's rows, including NULL-group-key dropping and per-group
-    thresholds."""
+    path's rows and schema, including NULL-group-key dropping and
+    per-group thresholds."""
     from dask_geomodeling_spark.geometry.sources import DataFrameSource
     from dask_geomodeling_spark.pipeline.text import KLLQuantile
     from pyspark.sql import functions as F
@@ -1686,14 +1686,11 @@ def test_kll_quantile_distributed_threshold_matches(spark):
         got = plan.collect()
         return sorted([tuple(r) for r in got])
 
-    default = rows(blk.plan(spark))
-    old = KLLQuantile.GROUP_THRESHOLD
-    KLLQuantile.GROUP_THRESHOLD = 0
-    try:
-        forced = rows(blk.plan(spark))
-    finally:
-        KLLQuantile.GROUP_THRESHOLD = old
+    default_df = blk.plan(spark)
+    forced_df = blk.plan(spark, driver_threshold=0)
+    default, forced = rows(default_df), rows(forced_df)
     assert forced == default
+    assert forced_df.schema == default_df.schema
     assert len(default) == 5  # NULL group keys dropped by both paths
 
 

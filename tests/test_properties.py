@@ -811,8 +811,9 @@ _D8 = ((0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8),
 def test_hydrology_euler_equals_driver(spark_prop, data):
     """Round-12 verdict property: on random acyclic flow forests, the
     DISTRIBUTED path (Euler-tour list ranking / pointer doubling /
-    junction-weighted rankings, forced via driver_threshold=0) is
-    row-identical to the exact DRIVER traversal for the whole
+    junction-weighted rankings, forced via the request key
+    driver_threshold=0) is row- and schema-identical to the exact
+    DRIVER traversal for the whole
     hydrology family — FlowAccumulation (plain and weighted),
     FlowLength, Watershed, StreamOrder.
 
@@ -854,22 +855,20 @@ def test_hydrology_euler_equals_driver(spark_prop, data):
     wts = DataFrameRasterSource(grid.withColumn(
         "value",
         ((F.col("y") * 3 + F.col("x") + 1) * 0.1).cast("double")))
-    builders = {
-        "accumulation": lambda thr: FlowAccumulation(
-            src, driver_threshold=thr),
-        "accumulation_weighted": lambda thr: FlowAccumulation(
-            src, driver_threshold=thr, weights=wts),
-        "length": lambda thr: FlowLength(src, driver_threshold=thr),
-        "watershed": lambda thr: Watershed(src, driver_threshold=thr),
-        "stream_order": lambda thr: StreamOrder(
-            src, driver_threshold=thr),
+    blocks = {
+        "accumulation": FlowAccumulation(src),
+        "accumulation_weighted": FlowAccumulation(src, weights=wts),
+        "length": FlowLength(src),
+        "watershed": Watershed(src),
+        "stream_order": StreamOrder(src),
     }
-    for name, mk in builders.items():
-        via_driver = sorted(
-            map(tuple, mk(10 ** 9).plan(spark_prop).collect()))
-        via_euler = sorted(
-            map(tuple, mk(0).plan(spark_prop).collect()))
+    for name, blk in blocks.items():
+        driver_df = blk.plan(spark_prop, driver_threshold=10 ** 9)
+        euler_df = blk.plan(spark_prop, driver_threshold=0)
+        via_driver = sorted(map(tuple, driver_df.collect()))
+        via_euler = sorted(map(tuple, euler_df.collect()))
         assert via_driver == via_euler, (name, offs, prio)
+        assert driver_df.schema == euler_df.schema, name
 
 
 @settings(max_examples=15, deadline=None)

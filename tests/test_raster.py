@@ -1221,7 +1221,7 @@ def test_raster_components_labels_regions(spark):
     assert out[(1, 1)] != out[(0, 0)]
 
 
-def test_components_distributed_matches_driver(spark, monkeypatch):
+def test_components_distributed_matches_driver(spark):
     """r16 optimization pin: the bounded driver union-find mirror of
     RasterComponents is bit-identical to the distributed star-round
     labeling — same canonical min-(time,y,x) member, same
@@ -1249,15 +1249,10 @@ def test_components_distributed_matches_driver(spark, monkeypatch):
                                connectivity=conn)
         drv_df = blk.plan(spark)
         drv = sorted(map(tuple, drv_df.collect()))
-        monkeypatch.setattr(RasterComponents,
-                            "DRIVER_CELL_THRESHOLD", -1)
-        dist_df = blk.plan(spark)
+        dist_df = blk.plan(spark, driver_threshold=0)
         dist = sorted(map(tuple, dist_df.collect()))
-        monkeypatch.setattr(RasterComponents,
-                            "DRIVER_CELL_THRESHOLD", 65536)
         assert drv == dist
-        assert [(f.name, f.dataType) for f in drv_df.schema.fields] \
-            == [(f.name, f.dataType) for f in dist_df.schema.fields]
+        assert drv_df.schema == dist_df.schema
     # NaN cell values must route to the distributed path (Spark joins
     # match NaN = NaN; the Python mirror would not)
     nan_cells = cells + [(t1, 5, 5, float("nan")),
@@ -1758,7 +1753,7 @@ def test_flow_accumulation_convergent_valley(spark):
     acc = {(r["y"], r["x"]): r["value"] for r in FlowAccumulation(
         fd).plan(spark).collect()}
     acc_e = {(r["y"], r["x"]): r["value"] for r in FlowAccumulation(
-        fd, driver_threshold=0).plan(spark).collect()}
+        fd).plan(spark, driver_threshold=0).collect()}
     assert acc == acc_e
     # closed form: hillslope chains x<3: acc = x; x>3: acc = 6 - x;
     # axis (y,3): acc = 7*(H-1-y) + 6
@@ -1788,10 +1783,9 @@ def test_flow_accumulation_cycle_detection(spark):
     blk = FlowAccumulation(DataFrameRasterSource(df))
     with pytest.raises(Exception, match="cycle"):
         blk.plan(spark).collect()
-    blk2 = FlowAccumulation(DataFrameRasterSource(df),
-                            driver_threshold=0, max_iter=8)
+    blk2 = FlowAccumulation(DataFrameRasterSource(df), max_iter=8)
     with pytest.raises(Exception, match="cycle|converge"):
-        blk2.plan(spark).collect()
+        blk2.plan(spark, driver_threshold=0).collect()
     # weighted driver path fails fast too (round-10 second review:
     # roots-only traversal would otherwise return silent zeros)
     wsrc = DataFrameRasterSource(df)
@@ -1823,7 +1817,7 @@ def test_flow_length_and_watershed(spark):
     r2 = math.sqrt(2.0)
     for kw in ({}, {"driver_threshold": 0}):
         got = {(r["y"], r["x"]): r["value"] for r in FlowLength(
-            fd, **kw).plan(spark).collect()}
+            fd).plan(spark, **kw).collect()}
         for (y, x), v in got.items():
             assert abs(v - (min(y, x) * r2 + abs(y - x))) < 1e-9
     # two-basin DEM: z = min(x, 6 - x); the x=3 ridge ties E (code 1
@@ -1835,7 +1829,7 @@ def test_flow_length_and_watershed(spark):
     fd2 = FlowDirection(DataFrameRasterSource(df2))
     for kw in ({}, {"driver_threshold": 0}):
         ws = {(r["y"], r["x"]): r["catchment"] for r in Watershed(
-            fd2, **kw).plan(spark).collect()}
+            fd2).plan(spark, **kw).collect()}
         for (y, x), c in ws.items():
             sink = 0 if 0 < x < 3 else 6 if x >= 3 else x
             assert c == "{}:{}:{}".format(epoch, y, sink), ((y, x), c)
@@ -1868,8 +1862,8 @@ def test_flow_paths_bit_determinism(spark):
     src = DataFrameRasterSource(df)
     via = {}
     for name, thr in (("driver", 10 ** 9), ("euler", 0)):
-        via[name] = sorted(map(tuple, FlowLength(
-            src, driver_threshold=thr).plan(spark).collect()))
+        via[name] = sorted(map(tuple, FlowLength(src).plan(
+            spark, driver_threshold=thr).collect()))
     assert via["driver"] == via["euler"]
     got = {(r[1], r[2]): r[3] for r in via["euler"]}
     # the falsifier cell: one float expression, identical on both paths
@@ -1885,8 +1879,8 @@ def test_flow_paths_bit_determinism(spark):
     via = {}
     for name, thr in (("driver", 10 ** 9), ("euler", 0)):
         via[name] = sorted(map(tuple, FlowAccumulation(
-            src, weights=wts, driver_threshold=thr)
-            .plan(spark).collect()))
+            src, weights=wts)
+            .plan(spark, driver_threshold=thr).collect()))
     assert via["driver"] == via["euler"]
     acc = {(r[1], r[2]): r[3] for r in via["euler"]}
     # upstream of (0,0): weights k/3 of (0,1)->2/3, (1,2)->6/3,
@@ -1947,9 +1941,9 @@ def test_sieve_filter_iterate_mutual_small_pair(spark):
     assert len(got) == 4 and set(got.values()) == {1.0}, got
 
 
-def test_sieve_iterate_distributed_matches_driver(spark, monkeypatch):
+def test_sieve_iterate_distributed_matches_driver(spark):
     """r15 optimization pin: the iterate fixpoint's driver
-    short-circuit (DRIVER_CELL_THRESHOLD) and the distributed
+    short-circuit (the ``bounded_cells`` gate) and the distributed
     round loop are the SAME algorithm — bit-identical values on a
     fixture with a speck cascade, an equal-size tie pair, and two
     time slices."""
@@ -1973,16 +1967,17 @@ def test_sieve_iterate_distributed_matches_driver(spark, monkeypatch):
         cells, "time timestamp, y bigint, x bigint, value double")
     blk = SieveFilter(DataFrameRasterSource(df), threshold=4,
                       iterate=True, max_rounds=8)
+    drv_df = blk.plan(spark)
+    dist_df = blk.plan(spark, driver_threshold=0)
     drv = {(r["time"], r["y"], r["x"]): r["value"]
-           for r in blk.plan(spark).collect()}
-    monkeypatch.setattr(SieveFilter, "DRIVER_CELL_THRESHOLD", -1)
+           for r in drv_df.collect()}
     dist = {(r["time"], r["y"], r["x"]): r["value"]
-            for r in blk.plan(spark).collect()}
+            for r in dist_df.collect()}
     assert drv == dist
+    assert drv_df.schema == dist_df.schema
 
 
-def test_sieve_single_pass_distributed_matches_driver(spark,
-                                                      monkeypatch):
+def test_sieve_single_pass_distributed_matches_driver(spark):
     """r15 optimization pin: the one-wave ``iterate=False`` driver
     short-circuit (uphill OFF, merges take the neighbor's ORIGINAL
     value) matches the distributed ``_merge_pass`` bit-identically —
@@ -2001,20 +1996,23 @@ def test_sieve_single_pass_distributed_matches_driver(spark,
     df = spark.createDataFrame(
         cells, "time timestamp, y bigint, x bigint, value double")
     blk = SieveFilter(DataFrameRasterSource(df), threshold=4)
+    drv_df = blk.plan(spark)
+    dist_df = blk.plan(spark, driver_threshold=0)
     drv = {(r["time"], r["y"], r["x"]): r["value"]
-           for r in blk.plan(spark).collect()}
-    monkeypatch.setattr(SieveFilter, "DRIVER_CELL_THRESHOLD", -1)
+           for r in drv_df.collect()}
     dist = {(r["time"], r["y"], r["x"]): r["value"]
-            for r in blk.plan(spark).collect()}
+            for r in dist_df.collect()}
     assert drv == dist
+    assert drv_df.schema == dist_df.schema
 
 
 def test_hydrology_fast_path_matches_machinery(spark):
     """r15 optimization pin: the bounded-cell driver fast path
-    (_collect_cells + tuple-key walks) is bit-identical to the
-    distributed machinery (driver_threshold=0 forces it) for every
-    hydrology op, on a two-time fixture with pits, edge drains and
-    diagonal chains."""
+    (bounded_cells + tuple-key walks) is bit-identical, rows and
+    schema (nullability included), to the distributed machinery (the
+    request key driver_threshold=0 forces it) for every hydrology op,
+    on a two-time fixture with pits, edge drains and diagonal
+    chains."""
     import datetime
 
     from dask_geomodeling_spark.raster.hydrology import (
@@ -2040,28 +2038,18 @@ def test_hydrology_fast_path_matches_machinery(spark):
         [(t0, 0, 0, 10.0), (t0, 5, 5, 20.0)],
         "time timestamp, y bigint, x bigint, value double"))
 
-    def rows_of(blk):
-        return sorted(tuple(r) for r in blk.plan(spark).collect())
-
-    pairs = [
-        (FlowAccumulation(direction),
-         FlowAccumulation(direction, driver_threshold=0)),
-        (FlowAccumulation(direction, weights=wts),
-         FlowAccumulation(direction, weights=wts,
-                          driver_threshold=0)),
-        (FlowLength(direction),
-         FlowLength(direction, driver_threshold=0)),
-        (Watershed(direction),
-         Watershed(direction, driver_threshold=0)),
-        (StreamOrder(direction),
-         StreamOrder(direction, driver_threshold=0)),
-        (CostDistance(cost, srcs),
-         CostDistance(cost, srcs, driver_threshold=0)),
-        (CostAllocation(cost, srcs),
-         CostAllocation(cost, srcs, driver_threshold=0)),
-    ]
-    for fast, dist in pairs:
-        assert rows_of(fast) == rows_of(dist), type(fast).__name__
+    blocks = [FlowAccumulation(direction),
+              FlowAccumulation(direction, weights=wts),
+              FlowLength(direction), Watershed(direction),
+              StreamOrder(direction), CostDistance(cost, srcs),
+              CostAllocation(cost, srcs)]
+    for blk in blocks:
+        fast = blk.plan(spark)
+        dist = blk.plan(spark, driver_threshold=0)
+        name = type(blk).__name__
+        assert sorted(map(tuple, fast.collect())) \
+            == sorted(map(tuple, dist.collect())), name
+        assert fast.schema == dist.schema, name
 
 
 def test_packed_cells_reliable_checkpoint_dir(spark, tmp_path):
@@ -2081,10 +2069,11 @@ def test_packed_cells_reliable_checkpoint_dir(spark, tmp_path):
     dem = DataFrameRasterSource(spark.createDataFrame(
         [(t0, y, x, float(y + x)) for y in range(5) for x in range(5)],
         "time timestamp, y bigint, x bigint, value double"))
-    blk = FlowAccumulation(FlowDirection(dem), driver_threshold=0)
+    blk = FlowAccumulation(FlowDirection(dem))
 
     def rows_of():
-        return sorted(tuple(r) for r in blk.plan(spark).collect())
+        return sorted(tuple(r) for r in
+                      blk.plan(spark, driver_threshold=0).collect())
 
     baseline = rows_of()
     ckpt = str(tmp_path / "ckpt")
@@ -2120,14 +2109,15 @@ def test_flow_accumulation_weights_probe_bounds_collect(spark):
          for x in range(12)],
         "time timestamp, y bigint, x bigint, value double"))
 
-    def rows_of(blk):
-        return sorted(tuple(r) for r in blk.plan(spark).collect())
+    blk = FlowAccumulation(direction, weights=wts)
 
-    mixed = rows_of(FlowAccumulation(direction, weights=wts,
-                                     driver_threshold=80))
-    dist = rows_of(FlowAccumulation(direction, weights=wts,
-                                    driver_threshold=0))
-    drv = rows_of(FlowAccumulation(direction, weights=wts))
+    def rows_of(**request):
+        return sorted(tuple(r) for r in
+                      blk.plan(spark, **request).collect())
+
+    mixed = rows_of(driver_threshold=80)
+    dist = rows_of(driver_threshold=0)
+    drv = rows_of()
     assert mixed == dist == drv
 
 
@@ -2146,10 +2136,9 @@ def test_watershed_even_cycle_fails_fast(spark):
     df = spark.createDataFrame(
         [(t, 0, 0, 1.0), (t, 0, 1, 16.0)],
         "time timestamp, y bigint, x bigint, value double")
-    blk = Watershed(DataFrameRasterSource(df), driver_threshold=0,
-                    max_iter=8)
+    blk = Watershed(DataFrameRasterSource(df), max_iter=8)
     with pytest.raises(Exception, match="cycle"):
-        blk.plan(spark).collect()
+        blk.plan(spark, driver_threshold=0).collect()
 
 
 def test_warp_cubic_low_edge_margin(spark):
@@ -2230,7 +2219,7 @@ def test_flow_accumulation_weighted(spark):
 
     for kw in ({}, {"driver_threshold": 0}):
         got = {(r["y"], r["x"]): r["value"] for r in FlowAccumulation(
-            fd, weights=wsrc, **kw).plan(spark).collect()}
+            fd, weights=wsrc).plan(spark, **kw).collect()}
         for c, v in got.items():
             assert abs(v - exp(c)) < 1e-9, (kw, c, v, exp(c))
     import pytest
@@ -2309,7 +2298,7 @@ def test_stream_order_ramp_and_paths_agree(spark):
 
     for kw in ({}, {"driver_threshold": 0}):
         got = {(r["y"], r["x"]): r["value"] for r in StreamOrder(
-            fd, **kw).plan(spark).collect()}
+            fd).plan(spark, **kw).collect()}
         assert len(got) == n * n
         for (y, x), v in got.items():
             assert v == expect(y, x), ((y, x), v, expect(y, x))
@@ -2343,7 +2332,7 @@ def test_stream_order_perfect_confluence(spark):
     src = DataFrameRasterSource(df)
     for kw in ({}, {"driver_threshold": 0}):
         got = {(r["y"], r["x"]): r["value"] for r in StreamOrder(
-            src, **kw).plan(spark).collect()}
+            src).plan(spark, **kw).collect()}
         assert got[(0, 0)] == 1.0 and got[(1, 0)] == 1.0
         assert got[(0, 2)] == 1.0 and got[(1, 2)] == 1.0
         assert got[(3, 0)] == 1.0
@@ -2370,8 +2359,8 @@ def test_stream_order_cycle_fails_fast(spark):
     with pytest.raises(Exception, match="cycle"):
         StreamOrder(src).plan(spark).collect()
     with pytest.raises(Exception, match="cycle|converge"):
-        StreamOrder(src, driver_threshold=0,
-                    max_iter=8).plan(spark).collect()
+        StreamOrder(src, max_iter=8).plan(
+            spark, driver_threshold=0).collect()
 
 
 def _cd_grid(spark, n=12, cost_expr="CAST(x + 1 AS DOUBLE)"):
@@ -2397,9 +2386,8 @@ def test_cost_distance_ramp_and_paths_agree(spark):
         "time", "y", "x", F.lit(1.0).alias("value"))
     for thr in (None, 0):
         rows = CostDistance(DataFrameRasterSource(grid),
-                            DataFrameRasterSource(srcs),
-                            driver_threshold=thr) \
-            .plan(spark).collect()
+                            DataFrameRasterSource(srcs)) \
+            .plan(spark, driver_threshold=thr).collect()
         assert len(rows) == 144
         for r in rows:
             assert r["cost_distance"] == r["x"] * (r["x"] + 2) / 2.0
@@ -2448,9 +2436,9 @@ def test_cost_distance_fail_fast_round_bound(spark):
         "time", "y", "x", F.lit(1.0).alias("value"))
     blk = CostDistance(DataFrameRasterSource(grid),
                        DataFrameRasterSource(srcs),
-                       max_iter=2, driver_threshold=0)
+                       max_iter=2)
     with pytest.raises(ValueError, match="not converged"):
-        blk.plan(spark).collect()
+        blk.plan(spark, driver_threshold=0).collect()
 
 
 def test_cost_allocation_tie_break_and_paths_agree(spark):
@@ -2476,8 +2464,8 @@ def test_cost_allocation_tie_break_and_paths_agree(spark):
         rows = {r["x"]: (r["cost_distance"], r["allocation"])
                 for r in CostAllocation(
                     DataFrameRasterSource(grid),
-                    DataFrameRasterSource(srcs),
-                    driver_threshold=thr).plan(spark).collect()}
+                    DataFrameRasterSource(srcs)).plan(
+                        spark, driver_threshold=thr).collect()}
         assert rows[0] == (0.0, 30.0)
         assert rows[8] == (0.0, 10.0)
         assert rows[2] == (2.0, 30.0)

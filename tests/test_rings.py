@@ -957,7 +957,8 @@ def test_cluster_dbscan_bridge_merges_via_core_chain(spark):
 def test_cluster_dbscan_driver_matches_machinery(spark):
     """r15 optimization pin: the bounded driver mirror (the default
     path for small point sets) is exactly identical to the
-    distributed grid-join/star machinery (driver_threshold=0 forces
+    distributed grid-join/star machinery (the request key
+    driver_threshold=0 forces
     it) on fixtures covering blobs, borders with tie-breaks, chains,
     noise and min_points=1 singletons."""
     from dask_geomodeling_spark.geometry.spatial_join import (
@@ -978,13 +979,13 @@ def test_cluster_dbscan_driver_matches_machinery(spark):
              (chain, dict(eps=1.1, min_points=2)),
              (chain, dict(eps=0.9, min_points=2))]
     for pts, kw in cases:
-        src = LiteralGeometrySource(pts)
-        fast = sorted(tuple(r) for r in ClusterDBSCAN(src, **kw)
-                      .plan(spark).collect())
-        slow = sorted(tuple(r) for r in
-                      ClusterDBSCAN(src, driver_threshold=0, **kw)
-                      .plan(spark).collect())
+        blk = ClusterDBSCAN(LiteralGeometrySource(pts), **kw)
+        fast_df = blk.plan(spark)
+        slow_df = blk.plan(spark, driver_threshold=0)
+        fast = sorted(tuple(r) for r in fast_df.collect())
+        slow = sorted(tuple(r) for r in slow_df.collect())
         assert fast == slow, (kw, fast, slow)
+        assert fast_df.schema == slow_df.schema, kw
 
 
 def test_geodesic_area_and_length(spark):

@@ -87,18 +87,14 @@ dem = DataFrameRasterSource(hydro_case())
 fd = FlowDirection(dem)
 wts = DataFrameRasterSource(
     grid_df(12, 12, density=0.9, scale=3.0))
-for nm, mk in (
-        ("flow_length", lambda thr: FlowLength(
-            fd, driver_threshold=thr)),
-        ("flow_acc_weighted", lambda thr: FlowAccumulation(
-            fd, weights=wts, driver_threshold=thr)),
-        ("flow_acc", lambda thr: FlowAccumulation(
-            fd, driver_threshold=thr)),
-        ("watershed", lambda thr: Watershed(fd, driver_threshold=thr)),
-        ("stream_order", lambda thr: StreamOrder(
-            fd, driver_threshold=thr))):
-    a = bits(mk(10 ** 9).plan(spark).collect())
-    b = bits(mk(0).plan(spark).collect())
+for nm, blk in (
+        ("flow_length", FlowLength(fd)),
+        ("flow_acc_weighted", FlowAccumulation(fd, weights=wts)),
+        ("flow_acc", FlowAccumulation(fd)),
+        ("watershed", Watershed(fd)),
+        ("stream_order", StreamOrder(fd))):
+    a = bits(blk.plan(spark, driver_threshold=10 ** 9).collect())
+    b = bits(blk.plan(spark, driver_threshold=0).collect())
     if a != b:
         d = sum(1 for x, y in zip(a, b) if x != y)
         fails.append((nm, "driver vs distributed", d))
@@ -116,9 +112,9 @@ for nm, cls in (("cost_distance", CostDistance),
     outs = []
     for thr, p in ((10 ** 9, 1), (0, 1), (0, 64)):
         blk = cls(DataFrameRasterSource(cost_rows.repartition(p)),
-                  DataFrameRasterSource(srcs),
-                  driver_threshold=thr)
-        outs.append(bits(blk.plan(spark).collect()))
+                  DataFrameRasterSource(srcs))
+        outs.append(bits(blk.plan(spark, driver_threshold=thr)
+                         .collect()))
     if any(o != outs[0] for o in outs[1:]):
         fails.append((nm, "path/partitioning drift", 0))
         print("FALSIFIED", nm)
