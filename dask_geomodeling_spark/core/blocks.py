@@ -93,7 +93,9 @@ class BuildContext:
         ``default`` (the gate's module constant) when the request has
         none; ``n <= 0`` returns ``None`` without running a job.
 
-        One ``df.limit(n + 1).collect()`` job: LocalLimit stops each
+        One ``df.limit(n + 1).collect()`` action; under adaptive query
+        execution each query stage of the upstream plan (one per
+        exchange) runs as its own Spark job.  LocalLimit stops each
         scan task early on data-sized inputs, and in the bounded case
         the probe IS the collect, so the upstream plan runs once.  A
         NaN in ``nan_column`` on any collected row also returns

@@ -6099,11 +6099,9 @@ def cluster_representative(spark, sf_dir, **request):
         ClusterRepresentative, DedupClusters, NgramJaccard)
     docs = documents_src(sf_dir)
     pairs = NgramJaccard(docs, n=3, threshold=0.5)
-    # star + the <=64k-edge driver short-circuit: near-dup pair graphs
-    # are tiny relative to the corpus, and label propagation's
-    # per-round scheduling floor dominates at bench SFs
-    clusters = DedupClusters(docs, pairs, algorithm="star",
-                             ids_unique=True, pairs_canonical=True)
+    # near-dup pair graphs are tiny relative to the corpus, so they
+    # take the <=64k-edge driver short-circuit of the star rounds
+    clusters = DedupClusters(docs, pairs, ids_unique=True)
     rep = ClusterRepresentative(docs, clusters, "n_chars")
     return rep.plan(spark, **request).select(
         "cluster_id", "doc_id", "n_chars", "n_members")
@@ -7885,15 +7883,15 @@ FROM reach GROUP BY src
 def dedup_clusters(spark, sf_dir):
     """DedupClusters: connected components over NgramJaccard pairs —
     per-document cluster id (min reachable doc id) + keep-one
-    canonical flag.  Spark runs iterative min-label propagation (one
-    join + one agg per round, localCheckpoint-bounded lineage); the
-    oracle re-derives the same fixpoint with a recursive CTE."""
+    canonical flag.  Spark runs the large-star / small-star rounds
+    (O(log²) in the component diameter; small pair graphs label with
+    the driver union-find); the oracle re-derives the same fixpoint
+    with a recursive CTE."""
     from dask_geomodeling_spark.pipeline.dedup import (DedupClusters,
                                                        NgramJaccard)
     docs = documents_src(sf_dir)
     pairs = NgramJaccard(docs, n=3, threshold=0.5)
-    return DedupClusters(docs, pairs, ids_unique=True,
-                         pairs_canonical=True).plan(spark)
+    return DedupClusters(docs, pairs, ids_unique=True).plan(spark)
 
 
 @demo("concat_corpora", oracle="""
@@ -7920,45 +7918,6 @@ def concat_corpora(spark, sf_dir):
         index_column="doc_id")
     return ConcatCorpora(web, books,
                          source_labels=["web", "books"]).plan(spark)
-
-
-@demo("dedup_clusters_star", oracle="""
-WITH RECURSIVE docs AS (
-  SELECT doc_id, {sh} AS sh
-  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS w
-        FROM documents)),
-e AS (SELECT doc_id, len(sh) AS nsh, unnest(sh) AS g FROM docs),
-c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             any_value(a.nsh) AS na, any_value(b.nsh) AS nb,
-             count(*) AS common
-      FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-pairs AS (
-  SELECT id_a, id_b FROM c
-  WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.5),
-edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a)
-SELECT src AS doc_id, MIN(node) AS cluster_id,
-       src = MIN(node) AS is_canonical
-FROM reach GROUP BY src
-""".format(sh=_dd_shingles(3)))
-def dedup_clusters_star(spark, sf_dir):
-    """DedupClusters(algorithm='star'): the alternating large-star /
-    small-star connected-components rounds (public MapReduce CC
-    recipe) — O(log^2) convergence regardless of component diameter,
-    the trillion-edge upgrade of the propagation loop.  Identical
-    fixpoint, same recursive-CTE oracle."""
-    from dask_geomodeling_spark.pipeline.dedup import (DedupClusters,
-                                                       NgramJaccard)
-    docs = documents_src(sf_dir)
-    pairs = NgramJaccard(docs, n=3, threshold=0.5)
-    return DedupClusters(docs, pairs, algorithm="star",
-                         ids_unique=True,
-                         pairs_canonical=True).plan(spark)
 
 
 @demo("hash_split", oracle="""
@@ -8985,7 +8944,7 @@ def corpus_prep(spark, sf_dir):
     decon = Decontaminate(train, holdout, n=6).plan(spark)
     clusters = DedupClusters(
         docs, NgramJaccard(docs, n=3, threshold=0.5),
-        ids_unique=True, pairs_canonical=True).plan(spark)
+        ids_unique=True).plan(spark)
     bucket = F.pmod(F.col("doc_id") * 2654435761, F.lit(10000))
     split = (F.when(bucket < 9000, "train")
              .when(bucket < 9500, "val").otherwise("test"))

@@ -676,6 +676,9 @@ class ClusterDBSCAN(GeometryBlock):
         label table.  Pinned distributed-vs-driver by
         test_cluster_dbscan_driver_matches_machinery."""
         import math
+
+        from dask_geomodeling_spark.pipeline.dedup import (
+            min_component_labels)
         pts = [(r["_pid"], r["x"], r["y"]) for r in rows]
         grid = {}
         for i, (_, x, y) in enumerate(pts):
@@ -703,33 +706,13 @@ class ClusterDBSCAN(GeometryBlock):
         core = [min_points == 1 or len(nb) + 1 >= min_points
                 for nb in nbrs]
         core_by_id = {pts[i][0]: core[i] for i in range(len(pts))}
-        parent = {}
-
-        def find(a):
-            root = a
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(a, a) != a:
-                parent[a], a = root, parent[a]
-            return root
-
-        for i, (pid, _, _) in enumerate(pts):
-            if not core[i]:
-                continue
-            for _d2, rid in nbrs[i]:
-                if core_by_id[rid]:
-                    ra, rb = find(pid), find(rid)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-        mins = {}
-        for i, (pid, _, _) in enumerate(pts):
-            if core[i]:
-                rt = find(pid)
-                mins[rt] = min(mins.get(rt, pid), pid)
+        mins = min_component_labels(
+            (pid, rid) for i, (pid, _, _) in enumerate(pts) if core[i]
+            for _d2, rid in nbrs[i] if core_by_id[rid])
         out = []
         for i, (pid, _, _) in enumerate(pts):
             if core[i]:
-                out.append((pid, mins[find(pid)], True))
+                out.append((pid, mins.get(pid, pid), True))
                 continue
             best = None
             for d2, rid in nbrs[i]:
@@ -737,5 +720,5 @@ class ClusterDBSCAN(GeometryBlock):
                                         or (d2, rid) < best):
                     best = (d2, rid)
             if best is not None:
-                out.append((pid, mins[find(best[1])], False))
+                out.append((pid, mins.get(best[1], best[1]), False))
         return out

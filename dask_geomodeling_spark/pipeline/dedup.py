@@ -987,61 +987,73 @@ class SemDedup(BaseSingle):
                 .withColumn("_d", F.lit(True)))
 
 
+def min_component_labels(pairs):
+    """Exact driver union-find over ``(a, b)`` pairs: ``{node: the
+    smallest node of its component}`` for every node a pair touches.
+    Shared by every driver mirror of the star rounds (DedupClusters,
+    RasterComponents, SieveFilter, ClusterDBSCAN).  Unions link the
+    larger root under the smaller, so each root already IS its
+    component's minimum — no second pass recomputes it."""
+    parent = {}
+
+    def find(a):
+        root = a
+        while parent[root] != root:
+            root = parent[root]
+        while parent[a] != root:
+            parent[a], a = root, parent[a]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 class DedupClusters(Block):
     """Connected components over near-duplicate pairs: every document
     gets a ``cluster_id`` = the smallest doc id reachable through the
     pair graph (singletons cluster with themselves), plus
     ``is_canonical`` — the keep-one-per-cluster flag a training-data
     pipeline filters on after MinHashLSH / NgramJaccard / SimHash.
+    Pairs may come in either order, repeat, or name ids absent from
+    ``source``: such ids still connect their neighbors but emit no
+    row of their own.
 
-    Execution, ``algorithm="label"`` (default): iterative min-label
-    propagation — each round joins the (undirected) edge list to the
-    current labels and takes the min label over self + neighbors;
-    convergence in <= component-diameter rounds (near-dup components
-    are shallow — a handful of rounds).  Each round is one shuffle
-    join + one aggregation; labels persist round-over-round and
-    lineage is cut by localCheckpoint to keep the plan bounded.
-
-    ``algorithm="star"``: the alternating large-star / small-star
-    rounds of the public "Connected Components in MapReduce and
-    Beyond" recipe (Kiveris et al.) — each round rewires every edge
-    toward its neighborhood minimum, so components collapse to stars
-    in O(log²) rounds regardless of diameter (a 10⁶-long chain
-    converges in ~20 rounds where propagation needs 10⁶) and per-node
-    degree concentrates on component minima only at the very end.
-    Same fixpoint, identical output; the driver only ever sees
-    converged-or-not counts.  Star graphs of at most
-    ``STAR_DRIVER_EDGES`` edges (the request's ``driver_threshold``
-    overrides the bound) label with an exact driver union-find
-    instead.
+    Execution: the alternating large-star / small-star rounds of
+    Kiveris et al., "Connected Components in MapReduce and Beyond"
+    (SoCC 2014) — each round rewires every edge toward its
+    neighborhood minimum, so components collapse to stars in O(log²)
+    rounds regardless of diameter (a 10⁶-long chain converges in ~20
+    rounds) and per-node degree concentrates on component minima only
+    at the very end.  The driver only ever sees converged-or-not
+    counts, and a graph still changing after ``max_iter`` rounds
+    raises.  Pair graphs of at most ``STAR_DRIVER_EDGES`` pairs (the
+    request's ``driver_threshold`` overrides the bound) label with an
+    exact driver union-find instead.
 
     Args:
       source: block of all documents (id column = its index).
       pairs: block producing near-dup pairs with ``id_a``/``id_b``.
       max_iter: round bound.
-      algorithm: "label" | "star".
       ids_unique: r16 (guide §2.4 — "a distinct on data that is
         already unique"): declare the source id column unique so the
         node table skips its data-sized ``distinct()`` shuffle.  Only
         set when the contract holds (e.g. the id IS the corpus
         primary key); duplicate ids would then duplicate output rows.
-      pairs_canonical: declare the pair block emits one row per pair
-        with ``id_a < id_b`` (NgramJaccard / MinHashLSH do), so the
-        undirected edge canonicalization skips its ``distinct()``.
     """
 
     def __init__(self, source, pairs, id_column=None, max_iter=10,
-                 algorithm="label", ids_unique=False,
-                 pairs_canonical=False):
+                 ids_unique=False):
         if not isinstance(source, Block) or not isinstance(pairs, Block):
             raise TypeError("source/pairs must be Blocks")
-        if algorithm not in ("label", "star"):
-            raise ValueError("algorithm must be 'label' or 'star'")
         if id_column is None:
             id_column = source.index_column
         super().__init__(source, pairs, id_column, int(max_iter),
-                         algorithm, bool(ids_unique),
-                         bool(pairs_canonical))
+                         bool(ids_unique))
 
     @property
     def columns(self):
@@ -1051,32 +1063,17 @@ class DedupClusters(Block):
     def _star_labels(ctx, und, max_iter):
         """Alternating large-star/small-star until the undirected
         canonical pair set is stable; returns (node, min-neighbor)
-        pairs of the final star graphs.  Graphs with at most
-        ``STAR_DRIVER_EDGES`` edges (the request's ``driver_threshold``
-        overrides it) short-circuit to an exact driver-side union-find
-        with identical labels."""
+        pairs of the final star graphs.  ``und`` holds ``_lo < _hi``
+        pairs, duplicates allowed: every round ends in a ``distinct``,
+        so a repeated pair costs at most one extra round.  Graphs with
+        at most ``STAR_DRIVER_EDGES`` pairs (the request's
+        ``driver_threshold`` overrides it) short-circuit to the exact
+        driver union-find ``min_component_labels`` with identical
+        labels."""
         rows = ctx.collect_bounded(und, STAR_DRIVER_EDGES)
         if rows is not None:
             import pyspark.sql.types as T
-            parent = {}
-
-            def find(a):
-                root = a
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(a, a) != a:
-                    parent[a], a = root, parent[a]
-                return root
-
-            for r in rows:
-                ra, rb = find(r["_lo"]), find(r["_hi"])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            nodes = {v for r in rows for v in (r["_lo"], r["_hi"])}
-            mins = {}
-            for n in nodes:
-                rt = find(n)
-                mins[rt] = min(mins.get(rt, n), n)
+            mins = min_component_labels((r["_lo"], r["_hi"]) for r in rows)
             t = und.schema["_lo"].dataType
             schema = T.StructType([T.StructField("_id", t),
                                    T.StructField("_lbl", t)])
@@ -1089,7 +1086,7 @@ class DedupClusters(Block):
             # nodes/core joins become BroadcastHashJoin with zero
             # data-side exchanges.
             return F.broadcast(spark.createDataFrame(
-                [(n, mins[find(n)]) for n in sorted(nodes)], schema))
+                sorted(mins.items()), schema))
         # the count materializes the cache before round 1 plans, so
         # the round's joins see its size
         und = und.persist()
@@ -1149,56 +1146,19 @@ class DedupClusters(Block):
         return labels
 
     def _build(self, ctx):
-        (source, pairs, id_column, max_iter, algorithm, ids_unique,
-         pairs_canonical) = self.args
+        source, pairs, id_column, max_iter, ids_unique = self.args
         nodes = source._build(ctx).select(
             F.col(id_column).alias("_id"))
         if not ids_unique:
             nodes = nodes.distinct()
-        p = pairs._build(ctx).select("id_a", "id_b")
-        if algorithm == "star":
-            if pairs_canonical:
-                und = (p.select(F.col("id_a").alias("_lo"),
-                                F.col("id_b").alias("_hi"))
-                       .filter(F.col("_lo") != F.col("_hi")))
-            else:
-                und = (p.select(F.least("id_a", "id_b").alias("_lo"),
-                                F.greatest("id_a", "id_b").alias("_hi"))
-                       .filter(F.col("_lo") != F.col("_hi"))
-                       .distinct())
-            got = self._star_labels(ctx, und, max_iter)
-            labels = (nodes.join(got, "_id", "left")
-                      .select("_id", F.coalesce("_lbl", "_id")
-                              .alias("_lbl")))
-            return labels.select(
-                F.col("_id").alias("doc_id"),
-                F.col("_lbl").alias("cluster_id"),
-                (F.col("_id") == F.col("_lbl")).alias("is_canonical"))
-        edges = (p.select(F.col("id_a").alias("_src"),
-                          F.col("id_b").alias("_dst"))
-                 .union(p.select(F.col("id_b").alias("_src"),
-                                 F.col("id_a").alias("_dst"))))
-        if not pairs_canonical:
-            # canonical pairs (one row per pair, id_a < id_b) make the
-            # two directed halves disjoint and unique already
-            edges = edges.distinct()
-        edges = edges.persist()
-        labels = nodes.select("_id", F.col("_id").alias("_lbl")).persist()
-        for _ in range(max_iter):
-            prop = (edges.join(labels.withColumnRenamed("_id", "_dst"),
-                               "_dst")
-                    .select(F.col("_src").alias("_id"), "_lbl"))
-            new = (labels.union(prop).groupBy("_id")
-                   .agg(F.min("_lbl").alias("_lbl"))
-                   .localCheckpoint(eager=True))
-            changed = (new.withColumnRenamed("_lbl", "_new")
-                       .join(labels, "_id")
-                       .filter(F.col("_new") != F.col("_lbl")).count())
-            labels.unpersist()
-            labels = new
-            if changed == 0:
-                break
-        edges.unpersist()
+        und = (pairs._build(ctx)
+               .select(F.least("id_a", "id_b").alias("_lo"),
+                       F.greatest("id_a", "id_b").alias("_hi"))
+               .filter(F.col("_lo") != F.col("_hi")))
+        got = self._star_labels(ctx, und, max_iter)
+        labels = (nodes.join(got, "_id", "left")
+                  .select("_id", F.coalesce("_lbl", "_id")
+                          .alias("_lbl")))
         return labels.select(
             F.col("_id").alias("doc_id"),
             F.col("_lbl").alias("cluster_id"),

@@ -8,7 +8,7 @@ Scale shape: the adjacency edges build from TWO (or four, for
 8-connectivity) shuffle-free-keyed equi-joins of the cell table with
 itself — neighbor offsets are join keys, never a cross join — and the
 labels come from the alternating large-star/small-star rounds shared
-with ``pipeline.dedup.DedupClusters(algorithm='star')``: O(log²)
+with ``pipeline.dedup.DedupClusters``: O(log²)
 convergence regardless of component diameter (a river snaking across
 a continent-sized raster converges in ~20 rounds, where naive
 propagation needs its length).  The driver only ever sees
@@ -146,6 +146,23 @@ def decode_labels(lab, tindex, passthrough, alias):
                     .alias(alias)))
 
 
+def _same_value_components(cells, conn):
+    """Driver labeling of a ``{(us, y, x): value}`` cell dict:
+    ``{cell: its component's minimum cell}`` for every cell with an
+    equal-valued 4- (or 8-) neighbor; isolated cells are absent."""
+    from dask_geomodeling_spark.pipeline.dedup import min_component_labels
+    offs = [(0, 1), (1, 0)]
+    if conn == 8:
+        offs += [(1, 1), (1, -1)]
+    pairs = []
+    for (us, y, x), v in cells.items():
+        for dy, dx in offs:
+            nb = (us, y + dy, x + dx)
+            if nb in cells and cells[nb] == v:
+                pairs.append(((us, y, x), nb))
+    return min_component_labels(pairs)
+
+
 class RasterComponents(BaseSingle):
     """Label connected same-value regions.
 
@@ -210,52 +227,22 @@ class RasterComponents(BaseSingle):
         for r in rows:
             cells[(r["_us"], r["y"], r["x"])] = r["value"]
             times[r["_us"]] = r["time"]
-        offs = [(0, 1), (1, 0)]
-        if conn == 8:
-            offs += [(1, 1), (1, -1)]
-        parent = {}
-
-        def find(a):
-            root = a
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(a, a) != a:
-                parent[a], a = root, parent[a]
-            return root
-
-        for key, v in cells.items():
-            us, y, x = key
-            for dy, dx in offs:
-                nb = (us, y + dy, x + dx)
-                if nb in cells and cells[nb] == v:
-                    ra, rb = find(key), find(nb)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-        canon = {}
-        for key in cells:
-            c = find(key)
-            if c not in canon or key < canon[c]:
-                canon[c] = key
-        out = [(times[us], y, x, v,
-                "{}:{}:{}".format(*canon[find((us, y, x))]))
-               for (us, y, x), v in sorted(cells.items())]
+        canon = _same_value_components(cells, conn)
+        out = [(times[key[0]], key[1], key[2], v,
+                "{}:{}:{}".format(*canon.get(key, key)))
+               for key, v in sorted(cells.items())]
         schema = T.StructType(list(base.schema.fields)).add(
             "component", T.StringType(), False)
         return ctx.spark.createDataFrame(out, schema)
 
     @staticmethod
-    def _label(ctx, frame, conn, max_iter=20, scratch=None):
+    def _label(ctx, frame, conn, max_iter=20):
         """Label a ``time, y, x, value`` cell frame (NULLs dropped).
 
         Split out from ``_build`` (round 10) so ``SieveFilter``'s
-        iterate-to-fixpoint mode can re-label its own intermediate
-        merge results without wrapping them back into a Block.
-        ``scratch`` (optional list) collects the internally persisted
-        frames so iterative callers can unpersist them per round."""
+        single-pass merge can label its input frame."""
         from dask_geomodeling_spark.pipeline.dedup import DedupClusters
         nodes, tindex = packed_cells(ctx, frame, "RasterComponents")
-        if scratch is not None:
-            scratch.append(nodes)
         offsets = [(0, 1), (1, 0)]
         if conn == 8:
             offsets += [(1, 1), (1, -1)]
@@ -265,6 +252,8 @@ class RasterComponents(BaseSingle):
                          F.col("x").alias("_xb"),
                          F.col("value").alias("_vb"),
                          F.col("_id").alias("_idb"))
+        # each offset join yields every adjacent pair once, and no pair
+        # is adjacent under two offsets — no distinct() needed
         for dy, dx in offsets:
             e = (nodes.join(
                 b,
@@ -275,8 +264,7 @@ class RasterComponents(BaseSingle):
                 .select(F.least("_id", "_idb").alias("_lo"),
                         F.greatest("_id", "_idb").alias("_hi")))
             edges = e if edges is None else edges.unionByName(e)
-        und = edges.distinct()
-        labels = DedupClusters._star_labels(ctx, und, max_iter)
+        labels = DedupClusters._star_labels(ctx, edges, max_iter)
         # unpack the winning bigint back to the canonical member's
         # (tidx, y, x) and re-join the (broadcast) time index for the
         # public '<epoch_us>:<y>:<x>' string form
@@ -333,23 +321,13 @@ class SieveFilter(BaseSingle):
                          int(max_rounds))
 
     @staticmethod
-    def _merge_pass(ctx, frame, threshold, connectivity,
-                    uphill=False, scratch=None):
-        """One label → size → merge pass over a cell frame, returning
-        the merged ``time, y, x, value`` frame.
-
-        ``uphill=True`` (the iterate mode) only lets a small region
-        merge into a neighbor that strictly dominates it in
-        ``(size, smaller-key)`` order — two small regions that are
-        each other's largest neighbor would otherwise SWAP values
-        every round and livelock the fixpoint loop (round-10 review
-        fix); with the uphill rule exactly one of the pair absorbs
-        the other and the merged region grows.  Surviving regions
-        always dominate (size ≥ threshold > small's size), so the
-        one-pass default semantics are unchanged."""
+    def _merge_pass(ctx, frame, threshold, connectivity):
+        """The one-pass (``iterate=False``) label → size → merge over a
+        cell frame, returning the merged ``time, y, x, value`` frame:
+        every small region takes its largest neighbor's ORIGINAL
+        value."""
         from dask_geomodeling_spark.raster.spatial import _offsets_df
-        comp = RasterComponents._label(ctx, frame, connectivity,
-                                       scratch=scratch)
+        comp = RasterComponents._label(ctx, frame, connectivity)
         sizes = (comp.groupBy("time", "component")
                  .agg(F.count(F.lit(1)).cast("bigint").alias("_sz")))
         comp = comp.join(sizes, ["time", "component"])
@@ -376,11 +354,6 @@ class SieveFilter(BaseSingle):
                         F.col("_sz").alias("_nsz")),
             ["time", "y", "x"])
             .filter(F.col("_nc") != F.col("_sc")))
-        if uphill:
-            touch = touch.filter(
-                (F.col("_nsz") > F.col("_ssz"))
-                | ((F.col("_nsz") == F.col("_ssz"))
-                   & (F.col("_nc") < F.col("_sc"))))
         # one winner per SMALL REGION (the whole region merges):
         # largest neighbor size, ties to the smallest component key
         rep = (touch.groupBy("time", F.col("_sc").alias("component"))
@@ -402,9 +375,7 @@ class SieveFilter(BaseSingle):
         got = bounded_cells(ctx, frame)
         if got is not None:
             return self._driver_fixpoint(
-                ctx, *got, threshold, connectivity,
-                max_rounds if iterate else 1,
-                uphill=bool(iterate), converge=bool(iterate))
+                ctx, *got, threshold, connectivity, max_rounds, iterate)
         if not iterate:
             return self._merge_pass(ctx, frame, threshold,
                                     connectivity)
@@ -413,7 +384,7 @@ class SieveFilter(BaseSingle):
 
     @classmethod
     def _driver_fixpoint(cls, ctx, base, rows, threshold, connectivity,
-                         max_rounds, uphill=True, converge=True):
+                         max_rounds, iterate):
         """Exact driver-side mirror of the merge pass: same
         (size, decoded-string-key) tie order, same ``max_rounds``
         contract — bit-identical to the distributed loop (pinned by
@@ -421,10 +392,9 @@ class SieveFilter(BaseSingle):
         test_sieve_single_pass_distributed_matches_driver).
         ``rows`` is the caller's already-collected (and bounded)
         ``time, _us, y, x, value`` probe — the upstream plan is never
-        evaluated twice.  ``uphill=False, converge=False`` is the
-        one-wave ``iterate=False`` semantics (merge into the largest
-        neighbor's ORIGINAL value, no fixpoint, no exhaustion
-        error)."""
+        evaluated twice.  ``iterate=False`` is the one-wave semantics
+        (merge into the largest neighbor's ORIGINAL value, no uphill
+        rule, no fixpoint, no exhaustion error)."""
         cells = {}
         times = {}
         for r in rows:
@@ -435,32 +405,12 @@ class SieveFilter(BaseSingle):
             offs += [(1, 1), (1, -1)]
         both = offs + [(-dy, -dx) for dy, dx in offs]
         for _ in range(max_rounds):
-            parent = {}
-
-            def find(a):
-                root = a
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(a, a) != a:
-                    parent[a], a = root, parent[a]
-                return root
-
-            for key, v in cells.items():
-                us, y, x = key
-                for dy, dx in offs:
-                    nb = (us, y + dy, x + dx)
-                    if nb in cells and cells[nb] == v:
-                        ra, rb = find(key), find(nb)
-                        if ra != rb:
-                            parent[max(ra, rb)] = min(ra, rb)
-            comp = {key: find(key) for key in cells}
+            mins = _same_value_components(cells, connectivity)
+            comp = {key: mins.get(key, key) for key in cells}
             size = {}
-            canon = {}
-            for key, c in comp.items():
+            for c in comp.values():
                 size[c] = size.get(c, 0) + 1
-                if c not in canon or key < canon[c]:
-                    canon[c] = key
-            ck = {c: "{}:{}:{}".format(*canon[c]) for c in canon}
+            ck = {c: "{}:{}:{}".format(*c) for c in size}
             best = {}
             for key, v in cells.items():
                 us, y, x = key
@@ -476,9 +426,9 @@ class SieveFilter(BaseSingle):
                         continue
                     # uphill rule (iterate mode only): a strictly
                     # dominating neighbor absorbs
-                    if uphill and not (size[cn] > size[c]
-                                       or (size[cn] == size[c]
-                                           and ck[cn] < ck[c])):
+                    if iterate and not (size[cn] > size[c]
+                                        or (size[cn] == size[c]
+                                            and ck[cn] < ck[c])):
                         continue
                     cand = ((-size[cn], ck[cn]), cells[nb])
                     if c not in best or cand[0] < best[c][0]:
@@ -489,15 +439,14 @@ class SieveFilter(BaseSingle):
                 w = best.get(comp[key])
                 if w is not None:
                     cells[key] = w[1]
-            if not converge:
+            if not iterate:
                 break
         else:
-            if converge:
-                raise ValueError(
-                    "SieveFilter(iterate=True): did not converge in "
-                    "{} rounds — raise max_rounds (the loop is "
-                    "bounded by the region-graph diameter)"
-                    .format(max_rounds))
+            raise ValueError(
+                "SieveFilter(iterate=True): did not converge in "
+                "{} rounds — raise max_rounds (the loop is "
+                "bounded by the region-graph diameter)"
+                .format(max_rounds))
         out = [(times[us], y, x, v)
                for (us, y, x), v in sorted(cells.items())]
         return ctx.spark.createDataFrame(out, base.schema)

@@ -178,8 +178,9 @@ def _rank_doubling(cur, key, max_iter, op_name, zeros):
     each accumulator column; each round does
     ``acc += acc[_ptr]; _ptr = _ptr[_ptr]`` (one self-join +
     localCheckpoint), converging in ⌈log₂ chain-length⌉ rounds.
-    Shared by the Euler list ranking, FlowLength and the weighted
-    accumulation so the loop exists once (round-10 review refactor).
+    Shared by the Euler list ranking, FlowLength, Watershed and the
+    weighted accumulation so the loop exists once (round-10 review
+    refactor).
 
     ``zeros`` maps each accumulator column name to its zero literal.
     Accumulator types MUST be exactly associative — BIGINT counts or
@@ -661,10 +662,13 @@ class Watershed(BaseSingle):
     (the RasterComponents label format, so catchments compose with
     the components tooling).
 
-    Execution: pure pointer doubling — ``lab ← lab[lab]`` per round
-    (labels start at the parent, sinks label themselves), fixpoint in
-    ⌈log₂ depth⌉ self-join rounds; at most ``DRIVER_CELLS`` cells
-    short-circuit to a path-compressed driver walk."""
+    Execution: the shared pointer-doubling loop (``_rank_doubling``)
+    summing the BIGINT offsets ``parent − id`` along each flow path —
+    the sum telescopes to ``sink − id``, so every cell's label is
+    ``id + sum`` after ⌈log₂ depth⌉ self-join rounds (sinks label
+    themselves); a cycle never converges and raises.  At most
+    ``DRIVER_CELLS`` cells short-circuit to a path-compressed driver
+    walk."""
 
     def __init__(self, store, max_iter=48):
         if int(max_iter) < 1:
@@ -682,12 +686,19 @@ class Watershed(BaseSingle):
             return self._driver_fast(ctx, got)
         nodes, tindex, edges = _flow_graph(ctx, self.store,
                                            "Watershed")
-        labs = self._double_labels(nodes, edges, max_iter)
+        # every partial sum of the offsets is the difference of two
+        # packed ids, so the BIGINT sum is exact and in range
+        labs = _rank_doubling(
+            edges.select(F.col("_c").alias("_id"),
+                         F.col("_p").alias("_ptr"),
+                         (F.col("_p") - F.col("_c")).alias("_d")),
+            "_id", max_iter, "Watershed", {"_d": F.lit(0)})
         edges.unpersist()
         from dask_geomodeling_spark.raster.components import (
             decode_labels)
-        lab = (nodes.join(labs, "_id", "left")
-               .withColumn("_l", F.coalesce("_l", "_id")))
+        lab = (nodes.join(labs.select("_id", "_d"), "_id", "left")
+               .withColumn("_l", F.col("_id")
+                           + F.coalesce("_d", F.lit(0))))
         return decode_labels(lab, tindex,
                              ["time", "y", "x", "value"], "catchment")
 
@@ -731,64 +742,6 @@ class Watershed(BaseSingle):
                               + [T.StructField("catchment",
                                                T.StringType(), False)])
         return ctx.spark.createDataFrame(out, schema)
-
-    @staticmethod
-    def _double_labels(nodes, edges, max_iter):
-        # every node has a label row: parent if it has one, else self.
-        # Round-11 advice fix: mirror _rank_doubling's two iterative-
-        # loop guards — repartition by _id with a USER-NUMBERED count
-        # before every localCheckpoint (AQE byte-size coalescing would
-        # serialize the ~16-byte label rows onto ~2 cores), and free
-        # the previous round's checkpoint blocks once `changed` has
-        # consumed them (otherwise ~log₂(depth) data-sized checkpoints
-        # accumulate in executor storage — the measured r10 pathology).
-        from dask_geomodeling_spark.config import strip_plan_stats
-        spark = nodes.sparkSession
-        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        cur = strip_plan_stats(
-            (nodes.select("_id")
-             .join(edges.select(F.col("_c").alias("_id"),
-                                F.col("_p")), "_id", "left")
-             .select("_id", F.coalesce("_p", "_id").alias("_l"))
-             .repartition(par, F.col("_id"))
-             .localCheckpoint()))
-        for _ in range(max_iter):
-            jump = cur.select(F.col("_id").alias("_l"),
-                              F.col("_l").alias("_l2"))
-            new = strip_plan_stats(
-                (cur.join(jump, "_l", "left")
-                 .select("_id", F.coalesce("_l2", F.col("_l"))
-                         .alias("_l"))
-                 .repartition(par, F.col("_id"))
-                 .localCheckpoint()))
-            changed = (new.join(cur.select(F.col("_id"),
-                                           F.col("_l").alias("_lo")),
-                                "_id")
-                       .filter(F.col("_l") != F.col("_lo"))
-                       .limit(1).count())
-            try:
-                cur._jdf.rdd().unpersist(False)
-            except Exception:
-                pass
-            cur = new
-            if changed == 0:
-                # a converged label must be a ROOT (a node with no
-                # outgoing edge): lab ← lab[lab] on an even-length
-                # cycle reaches a period-2 orbit whose second round
-                # looks like a fixpoint (every cycle node "labels"
-                # itself) — round-10 review fix: any final label that
-                # still HAS a parent exposes the cycle
-                bad = (cur.join(edges.select(F.col("_c").alias("_l")),
-                                "_l", "left_semi").limit(1).count())
-                if bad:
-                    raise ValueError(
-                        "Watershed: direction raster contains a "
-                        "cycle")
-                return cur.select("_id", "_l")
-        raise ValueError(
-            "Watershed: label doubling did not converge in {} rounds "
-            "— direction raster contains a cycle or raise max_iter"
-            .format(max_iter))
 
 
 class StreamOrder(BaseSingle):

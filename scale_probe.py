@@ -188,7 +188,7 @@ def probe_cluster_representative(spark, n):
     docs = DataFrameSource(docs_df, index_column="doc_id")
     pairs = MinHashLSH(docs, num_perm=32, bands=8, verify=True,
                        threshold=0.5)
-    clusters = DedupClusters(docs, pairs, algorithm="star")
+    clusters = DedupClusters(docs, pairs)
     out = ClusterRepresentative(docs, clusters, "n_chars").plan(spark)
     materialize(out)
     return out.count()
@@ -265,8 +265,7 @@ def probe_dedup_clusters_star(spark, n):
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
     out = DedupClusters(DataFrameSource(docs, index_column="doc_id"),
                         DataFrameSource(edges, index_column="id_a"),
-                        id_column="doc_id",
-                        algorithm="star").plan(spark)
+                        id_column="doc_id").plan(spark)
     materialize(out)
     return out.count()
 

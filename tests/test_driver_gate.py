@@ -92,7 +92,7 @@ def _star(spark):
     pairs = DataFrameSource(spark.createDataFrame(
         [(0, 1), (1, 2), (4, 5)], "id_a bigint, id_b bigint"),
         index_column="id_a")
-    return DedupClusters(docs, pairs, algorithm="star")
+    return DedupClusters(docs, pairs)
 
 
 def _kll(spark):

@@ -660,10 +660,10 @@ def test_png_codec_roundtrip_and_all_filters():
     assert list(out) == [8, 8, 8, 16, 16, 16]
 
 
-def test_dedup_clusters_star_equals_label_propagation(spark):
-    """Large-star/small-star must reach the identical fixpoint as
-    min-label propagation — including on a long chain (the worst case
-    for propagation: diameter 40, but star collapses it within a
+def test_dedup_clusters_known_labels_both_paths(spark):
+    """The star rounds and the driver union-find give the known labels
+    and the same schema — including on a long chain (diameter 40, the
+    worst case for naive propagation; the star rounds collapse it in a
     handful of alternating rounds)."""
     from dask_geomodeling_spark.pipeline.dedup import DedupClusters
     chain = [{"id_a": i, "id_b": i + 1} for i in range(40)]
@@ -673,17 +673,40 @@ def test_dedup_clusters_star_equals_label_propagation(spark):
         [{"doc_id": i} for i in range(41)]
         + [{"doc_id": i} for i in (100, 103, 105, 200, 201, 999)])
     pairs = LiteralGeometrySource(chain + extra)
-    star = {(r.doc_id, r.cluster_id, r.is_canonical) for r in
-            DedupClusters(docs, pairs, id_column="doc_id", max_iter=8,
-                          algorithm="star").plan(spark).collect()}
-    # the chain needs 40 propagation rounds; give the baseline enough
-    label = {(r.doc_id, r.cluster_id, r.is_canonical) for r in
-             DedupClusters(docs, pairs, id_column="doc_id",
-                           max_iter=50).plan(spark).collect()}
-    assert star == label
-    assert (999, 999, True) in star            # singleton
-    assert (40, 0, False) in star              # chain end -> min 0
-    assert (105, 100, False) in star           # triangle -> min 100
+    want = ({(i, 0, i == 0) for i in range(41)}
+            | {(100, 100, True), (103, 100, False), (105, 100, False),
+               (200, 200, True), (201, 200, False), (999, 999, True)})
+    blk = DedupClusters(docs, pairs, id_column="doc_id", max_iter=8)
+    driver_df = blk.plan(spark)
+    dist_df = blk.plan(spark, driver_threshold=0)
+    for df in (driver_df, dist_df):
+        got = [(r.doc_id, r.cluster_id, r.is_canonical)
+               for r in df.collect()]
+        assert len(got) == len(want)
+        assert set(got) == want
+    assert driver_df.schema == dist_df.schema
+
+
+def test_dedup_clusters_ids_unique_contract(spark):
+    """A source with one duplicated id: by default the node table is
+    made distinct, so each id gets one row with its label; declaring
+    ``ids_unique=True`` skips that shuffle and, as documented, the
+    duplicated id then yields duplicated rows.  Both on the driver
+    union-find and on the distributed star rounds."""
+    from dask_geomodeling_spark.pipeline.dedup import DedupClusters
+    docs = LiteralGeometrySource(
+        [{"doc_id": i} for i in (1, 2, 2, 3, 7)])
+    pairs = LiteralGeometrySource([{"id_a": 3, "id_b": 2},
+                                   {"id_a": 2, "id_b": 1}])
+    once = [(1, 1, True), (2, 1, False), (3, 1, False), (7, 7, True)]
+    for unique, want in ((False, once),
+                         (True, sorted(once + [(2, 1, False)]))):
+        blk = DedupClusters(docs, pairs, id_column="doc_id",
+                            ids_unique=unique)
+        for request in ({}, {"driver_threshold": 0}):
+            got = sorted((r.doc_id, r.cluster_id, r.is_canonical)
+                         for r in blk.plan(spark, **request).collect())
+            assert got == want, (unique, request)
 
 
 def test_fit_fraction_samples_deterministically(spark):

@@ -5,7 +5,7 @@ of the reference semantics (numpy digitize / interp / choose)."""
 import math
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -869,6 +869,159 @@ def test_hydrology_euler_equals_driver(spark_prop, data):
         via_euler = sorted(map(tuple, euler_df.collect()))
         assert via_driver == via_euler, (name, offs, prio)
         assert driver_df.schema == euler_df.schema, name
+
+
+@st.composite
+def pair_graph(draw):
+    """``(source ids, pairs)`` on ids ``0..m-1``: the source holds a
+    random subset of the ids, so pairs may name ids missing from it;
+    pairs repeat, reverse and self-link."""
+    m = draw(st.integers(1, 12))
+    ids = st.integers(0, m - 1)
+    source = draw(st.lists(ids, min_size=1, unique=True))
+    pairs = draw(st.lists(st.tuples(ids, ids), max_size=16))
+    if pairs:
+        again = draw(st.lists(st.sampled_from(pairs), max_size=4))
+        pairs += [(b, a) if (a + b) % 2 else (a, b) for a, b in again]
+    return sorted(source), pairs
+
+
+@st.composite
+def chain_graph(draw):
+    """A chain of up to 45 nodes with randomly oriented pairs and a
+    random id per position (the component minimum sits anywhere)."""
+    n = draw(st.integers(2, 45))
+    perm = draw(st.permutations(list(range(n))))
+    flips = draw(st.lists(st.booleans(), min_size=n - 1,
+                          max_size=n - 1))
+    pairs = [(perm[i + 1], perm[i]) if f else (perm[i], perm[i + 1])
+             for i, f in enumerate(flips)]
+    return list(range(n)), pairs
+
+
+def bfs_min_labels(source, pairs):
+    """``{source id: smallest id reachable through the pairs}`` by
+    breadth-first search (ids missing from the source still connect)."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for s in source:
+        seen, frontier = {s}, [s]
+        while frontier:
+            nxt = []
+            for u in frontier:
+                for v in adj.get(u, ()):
+                    if v not in seen:
+                        seen.add(v)
+                        nxt.append(v)
+            frontier = nxt
+        out[s] = min(seen)
+    return out
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(st.one_of(pair_graph(), chain_graph()), min_size=1,
+                max_size=4))
+@example([(list(range(41)), [(i, i + 1) for i in range(40)])])
+@example([([0, 1], [(0, 100), (100, 1)])])
+def test_dedup_clusters_matches_bfs(spark_prop, graphs):
+    """DedupClusters on random pair multisets equals a breadth-first
+    search model, on the driver union-find (default request) and on
+    the distributed star rounds (``driver_threshold=0``), with one
+    schema.  Every graph gets its own id range, so one build covers
+    them all.  The explicit examples are a 41-node chain (one cluster)
+    and ``0–100–1`` with id 100 absent from the source (docs 0 and 1
+    connect through it; 100 emits no row)."""
+    from dask_geomodeling_spark.geometry.sources import DataFrameSource
+    from dask_geomodeling_spark.pipeline.dedup import DedupClusters
+    docs, pairs, want = [], [], set()
+    for g, (source, links) in enumerate(graphs):
+        off = 1000 * g
+        docs += [(s + off,) for s in source]
+        pairs += [(a + off, b + off) for a, b in links]
+        want |= {(s + off, lab + off, s == lab)
+                 for s, lab in bfs_min_labels(source, links).items()}
+    blk = DedupClusters(
+        DataFrameSource(spark_prop.createDataFrame(docs, "doc_id bigint"),
+                        index_column="doc_id"),
+        DataFrameSource(spark_prop.createDataFrame(
+            pairs, "id_a bigint, id_b bigint"), index_column="id_a"))
+    driver_df = blk.plan(spark_prop)
+    dist_df = blk.plan(spark_prop, driver_threshold=0)
+    for df in (driver_df, dist_df):
+        got = [tuple(r) for r in df.collect()]
+        assert len(got) == len(want), graphs
+        assert set(got) == want, graphs
+    assert driver_df.schema == dist_df.schema
+
+
+def union_find_partition(grid, conn):
+    """Same-value regions of a ``{(y, x): value}`` grid as a set of
+    frozensets, by a path-halving union-find."""
+    parent = {c: c for c in grid}
+
+    def find(c):
+        while parent[c] != c:
+            parent[c] = parent[parent[c]]
+            c = parent[c]
+        return c
+
+    offs = [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if conn == 8 else [])
+    for (y, x), v in grid.items():
+        for dy, dx in offs:
+            n = (y + dy, x + dx)
+            if grid.get(n) == v:
+                parent[find((y, x))] = find(n)
+    parts = {}
+    for c in grid:
+        parts.setdefault(find(c), set()).add(c)
+    return {frozenset(p) for p in parts.values()}
+
+
+@settings(max_examples=3, deadline=None)
+@given(st.lists(
+    st.integers(1, 7).flatmap(lambda h: st.integers(1, 7).flatmap(
+        lambda w: st.lists(st.sampled_from([None, 0.0, 1.0, 2.0]),
+                           min_size=h * w, max_size=h * w)
+        .map(lambda vals: {(i // w, i % w): v
+                           for i, v in enumerate(vals)
+                           if v is not None}))),
+    min_size=1, max_size=4))
+def test_raster_components_partition_matches_union_find(spark_prop,
+                                                        grids):
+    """RasterComponents 4- and 8-connectivity partitions equal an
+    independent union-find on random speckled grids, on the driver
+    mirror (default request) and on the distributed star rounds
+    (``driver_threshold=0``), with one schema.  The grids ride as
+    time slices of one frame; partitions are compared, not label
+    text."""
+    from dask_geomodeling_spark.raster.components import RasterComponents
+    from dask_geomodeling_spark.raster.sources import DataFrameRasterSource
+    rows = [(k, y, x, v) for k, g in enumerate(grids)
+            for (y, x), v in g.items()]
+    df = spark_prop.createDataFrame(
+        rows, "k int, y bigint, x bigint, value double").select(
+        F.expr("timestamp_seconds(86400 * k)").alias("time"),
+        "y", "x", "value")
+    src = DataFrameRasterSource(df)
+    for conn in (4, 8):
+        want = {frozenset((k, y, x) for y, x in part)
+                for k, g in enumerate(grids)
+                for part in union_find_partition(g, conn)}
+        blk = RasterComponents(src, connectivity=conn)
+        driver_df = blk.plan(spark_prop)
+        dist_df = blk.plan(spark_prop, driver_threshold=0)
+        for out in (driver_df, dist_df):
+            by_label = {}
+            for r in out.collect():
+                k = int(r["time"].timestamp() // 86400)
+                by_label.setdefault(r["component"], set()).add(
+                    (k, r["y"], r["x"]))
+            assert {frozenset(p) for p in by_label.values()} == want, (
+                conn, grids)
+        assert driver_df.schema == dist_df.schema
 
 
 @settings(max_examples=15, deadline=None)

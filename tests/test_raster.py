@@ -2122,9 +2122,8 @@ def test_flow_accumulation_weights_probe_bounds_collect(spark):
 
 
 def test_watershed_even_cycle_fails_fast(spark):
-    """Round-10 review fix: lab <- lab[lab] on a 2-cycle reaches a
-    period-2 orbit that LOOKS converged — the post-convergence root
-    check must still raise on the distributed path."""
+    """A 2-cycle never reaches a sink: the distributed path's pointer
+    doubling must raise instead of labeling the cycle."""
     import datetime
 
     import pytest
