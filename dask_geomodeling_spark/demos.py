@@ -11061,8 +11061,8 @@ def simplify_dp(spark, sf_dir):
     corners (area 16, 4 vertices); the ring stack (outer + CW 2x2 hole
     with a jittered edge vertex + a degenerate sliver) reduces to 2
     rings with signed area 16 - 4 = 12.  Runs in the sanctioned
-    Arrow-batched mapInPandas fallback (data-dependent recursion);
-    geometry crosses the boundary as JSON."""
+    Arrow-batched mapInArrow fallback (data-dependent recursion);
+    geometry crosses the boundary as nested lists."""
     from dask_geomodeling_spark.geometry.constructive import Simplify
     from dask_geomodeling_spark.geometry.geom_operations import Area
     customer = read_nanos_parquet(spark, _pq(sf_dir, "customer"))

@@ -438,10 +438,10 @@ class Simplify(BaseSingle):
     moves them; DP doesn't) and near-collinear chains drop regardless
     of grid alignment, the reference's shapely semantics.  The
     recursion is data-dependent, so it runs in the engine's sanctioned
-    Python fallback: an Arrow-batched ``mapInPandas`` numpy pass —
-    still a per-row map, no shuffle, one python worker per input
-    split.  Point/box columns pass through unchanged under 'dp'
-    (DP is defined on vertex chains)."""
+    Python fallback: one Arrow-batched ``mapInArrow`` pass over every
+    geometry column — still a per-row map, no shuffle, one python
+    worker per input split.  Point/box columns pass through unchanged
+    under 'dp' (DP is defined on vertex chains)."""
 
     def __init__(self, source, tolerance=None, preserve_topology=True,
                  algorithm="snap"):
@@ -464,10 +464,6 @@ class Simplify(BaseSingle):
         if not tol:
             return df
         if self.args[3] in ("dp", "vw"):
-            geom_cols = [c for c in ("vertices", "rings", "path")
-                         if c in df.columns]
-            if not geom_cols:
-                return df
             ftol = float(tol)
             if self.args[3] == "vw":
                 # tolerance = the MINIMUM effective triangle area
@@ -483,48 +479,17 @@ class Simplify(BaseSingle):
 
                 def path_fn(p):
                     return _dp_path(p, ftol)
-            # geometry crosses the Arrow boundary as JSON text: this
-            # container's pyarrow segfaults converting nullable
-            # triple-nested list columns to pandas, and the string
-            # contract is the one the WKB/codec paths already use
-            types = {f.name: f.dataType.simpleString()
-                     for f in df.schema.fields if f.name in geom_cols}
-            staged = df
-            for c in geom_cols:
-                staged = staged.withColumn(c, F.to_json(F.col(c)))
-
-            def gen(batches):
-                import json
-
-                import pandas as pd
-                for pdf in batches:
-                    data = {}
-                    for c in pdf.columns:
-                        if c == "vertices":
-                            data[c] = pd.Series(
-                                [None if g is None else json.dumps(
-                                    ring_fn(json.loads(g)))
-                                 for g in pdf[c]], dtype="object")
-                        elif c == "path":
-                            data[c] = pd.Series(
-                                [None if g is None else json.dumps(
-                                    path_fn(json.loads(g)))
-                                 for g in pdf[c]], dtype="object")
-                        elif c == "rings":
-                            data[c] = pd.Series(
-                                [None if g is None else json.dumps(
-                                    [r for r in
-                                     (ring_fn(rr)
-                                      for rr in json.loads(g))
-                                     if r is not None])
-                                 for g in pdf[c]], dtype="object")
-                        else:
-                            data[c] = pdf[c]
-                    yield pd.DataFrame(data)
-            out = staged.mapInPandas(gen, schema=staged.schema)
-            for c in geom_cols:
-                out = out.withColumn(c, F.from_json(F.col(c), types[c]))
-            return out
+            from dask_geomodeling_spark.geometry.polyclip import (
+                _map_rings)
+            fns = {
+                "vertices": lambda g: None if g is None else ring_fn(g),
+                "path": lambda g: None if g is None else path_fn(g),
+                "rings": lambda g: None if g is None else [
+                    r for r in map(ring_fn, g) if r is not None]}
+            kernels = {f.name: ([f.name], fns[f.name],
+                                f.dataType.simpleString())
+                       for f in df.schema.fields if f.name in fns}
+            return _map_rings(df, kernels) if kernels else df
         snap = lambda c: (F.round(F.col(c) / tol) * tol)  # noqa: E731
         for c in ("x", "y", "xmin", "ymin", "xmax", "ymax"):
             if c in df.columns:
@@ -742,7 +707,7 @@ class MinimumBoundingCircle(BaseSingle):
     """Per-feature minimum enclosing circle (geopandas
     ``minimum_bounding_circle``; shapely under the reference's GEOS
     toolbox, constructive.py:13) — exact Welzl over the feature's
-    vertices in the Arrow-batched map contract.  Adds ``center_x``,
+    vertices in one Arrow-batched ``mapInArrow`` pass.  Adds ``center_x``,
     ``center_y``, ``radius`` columns; box-only rows evaluate on their
     synthesized boundary ring; point rows get a zero-radius circle in
     pure SQL (no kernel row)."""
@@ -770,8 +735,8 @@ class MinimumBoundingCircle(BaseSingle):
                 "MinimumBoundingCircle needs geometry columns")
         gr = SpatialJoin._ring_expr(cols, "_g0")
         df = ensure_min_partitions(df, ctx.spark).withColumn("_g", gr)
-        df = _map_rings(df, ["_g"], _welzl_circle, "_g",
-                        "array<double>")
+        df = _map_rings(df, {"_g": (["_g"], _welzl_circle,
+                                    "array<double>")})
         return (df.withColumns({
             "center_x": F.col("_g")[0], "center_y": F.col("_g")[1],
             "radius": F.col("_g")[2]}).drop("_g"))
@@ -1470,7 +1435,7 @@ class IsValid(BaseSingle):
     Per-row precedence mirrors Area: ``rings`` > ``vertices``;
     point / box / path rows are always valid; NULL geometry -> NULL.
 
-    Plan shape: one Arrow-batched mapInPandas over the ring rows
+    Plan shape: one Arrow-batched mapInArrow over the ring rows
     (bounded per-feature vertex counts — the kernel is O(E^2) in one
     feature's edges, never data-sized); point/box frames short-circuit
     to a literal, no Python stage at all."""
@@ -1489,7 +1454,7 @@ class IsValid(BaseSingle):
     def _build(self, ctx):
         from dask_geomodeling_spark.config import ensure_min_partitions
         from dask_geomodeling_spark.geometry.polyclip import (
-            map_rings_to_scalar, rings_is_valid)
+            _map_rings, rings_is_valid)
         df = self.source._build(ctx)
         out_col = self.args[1]
         cols = set(df.columns)
@@ -1523,11 +1488,12 @@ class IsValid(BaseSingle):
             geom = F.expr("CASE WHEN vertices IS NOT NULL "
                           "THEN array(vertices) END")
         df = df.withColumn("_iv_g", geom)
-        df = map_rings_to_scalar(
-            ensure_min_partitions(df, ctx.spark), "_iv_g",
-            lambda g: None if g is None else rings_is_valid(g),
-            out_col)
-        return df.drop("_iv_g")
+        return _map_rings(
+            ensure_min_partitions(df, ctx.spark),
+            {out_col: (["_iv_g"],
+                       lambda g: None if g is None else rings_is_valid(g),
+                       "boolean")},
+            drop=["_iv_g"])
 
 
 class MakeValid(BaseSingle):
@@ -1550,7 +1516,7 @@ class MakeValid(BaseSingle):
     repair is multi-part — the Buffer ring-promotion convention.
     Rows whose repair is empty (fully degenerate) get NULL geometry.
 
-    Plan shape: one Arrow-batched mapInPandas over ring rows (the
+    Plan shape: one Arrow-batched mapInArrow over ring rows (the
     Simplify 'dp' / Buffer kernel contract); point/box frames are
     returned untouched with no Python stage."""
 

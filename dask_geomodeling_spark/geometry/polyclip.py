@@ -6,8 +6,9 @@ Closes the one reference-parity gap the judge flagged: the reference
 computes true per-feature geometric set operations through shapely
 (reference geometry/set_operations.py:12,70-78); this module provides
 the same results without GEOS, as a pure-python kernel that runs
-inside the engine's sanctioned Arrow-batched ``mapInPandas`` contract
-(the Simplify 'dp' pattern, constructive.py:258).
+inside the engine's sanctioned Arrow-batched ``mapInArrow`` contract
+(``_map_rings``: ring columns cross the Arrow boundary as nested
+lists, every other column passes through untouched).
 
 Algorithm: BOUNDARY CLASSIFICATION over the full segment arrangement —
 the classic regularized-boolean construction (the same family as
@@ -65,7 +66,7 @@ __all__ = ["polygon_boolean", "polygon_union_all",
            "polygon_union", "polygon_symmetric_difference",
            "polygon_make_valid", "rings_is_valid",
            "rings_signed_area", "map_rings_binary", "map_rings_unary",
-           "map_rings_to_scalar", "rings_literal_sql", "RINGS_TYPE"]
+           "rings_literal_sql", "RINGS_TYPE"]
 
 #: the engine's flat ring-list column type
 RINGS_TYPE = "array<array<array<double>>>"
@@ -683,9 +684,8 @@ def polygon_make_valid(rings):
 
 
 # --------------------------------------------------------------------------
-# Spark plumbing: Arrow-batched mapInPandas with the JSON geometry
-# contract (the Simplify 'dp' pattern, constructive.py:258 — this
-# container's pyarrow cannot convert nullable triple-nested lists)
+# Spark plumbing: Arrow-batched mapInArrow; nested-array ring columns
+# cross the boundary as nested lists (NULL as None)
 # --------------------------------------------------------------------------
 
 def kernel_parallelism(df, spark):
@@ -704,114 +704,86 @@ def kernel_parallelism(df, spark):
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
-def _map_rings(df, cols, fn, out_col, out_type, drop=()):
-    """Run ``fn(*parsed_cols) -> rings-or-None`` per row.  ``cols`` are
-    nested-array columns staged as JSON text across the Arrow boundary;
-    the result replaces ``out_col`` (cast to ``out_type``); the other
-    columns are restored to their original types.  EVERY nested-array
-    column of the frame is staged (not just ``cols``) — deep nullable
-    list columns cannot cross this container's Arrow boundary at all.
+def _to_pylist(arr):
+    """``arr.to_pylist()`` for (nested lists of) doubles, sliced from
+    the list offsets: pyarrow's own makes a scalar object per
+    coordinate and runs ~2x slower than parsing the same rings from
+    JSON text."""
+    import pyarrow as pa
+    if not len(arr):
+        return []
+    if pa.types.is_floating(arr.type):
+        out = arr.to_numpy(zero_copy_only=False).tolist()
+        if arr.null_count:
+            nulls = arr.is_null().to_numpy(zero_copy_only=False)
+            out = [None if n else v for v, n in zip(out, nulls)]
+        return out
+    offs = arr.offsets.to_numpy()
+    vals = _to_pylist(arr.values.slice(offs[0], offs[-1] - offs[0]))
+    offs = (offs - offs[0]).tolist()
+    valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+    return [vals[a:b] if v else None
+            for a, b, v in zip(offs, offs[1:], valid)]
+
+
+def _map_rings(df, kernels, drop=()):
+    """Run per-row kernels in one Arrow-batched ``mapInArrow``.
+
+    ``kernels`` maps each output column to ``(cols, fn, out_type)``:
+    ``fn`` takes the ``cols`` values as plain nested lists (``None``
+    for NULL) and its result lands raw in the output column as
+    ``out_type``, replacing that column or appended when it is new.
+    Every kernel reads the input batch; every other column passes
+    through as the same Arrow array.
 
     ``drop`` (r16, guide §4.1: ship only what the function needs)
     names input columns the kernel consumes but the CALLER discards
     afterwards — they are dropped from the batches IN PYTHON, so
-    their (often geometry-sized) JSON text never crosses the
-    Python→JVM return hop and is never re-parsed by from_json."""
-    from pyspark.sql import functions as F
-    all_types = {f.name: f.dataType.simpleString()
-                 for f in df.schema.fields}
-    stage = list(dict.fromkeys(
-        list(cols) + [c for c, t in all_types.items()
-                      if "array<array" in t]))
-    types = {}
-    staged = df
-    for c in stage:
-        types[c] = all_types[c]
-        staged = staged.withColumn(c, F.to_json(F.col(c)))
-    drop = [c for c in drop
-            if c in staged.columns and c != out_col]
-    from pyspark.sql.types import StructType
-    out_schema = StructType([f for f in staged.schema.fields
-                             if f.name not in drop])
+    their (often geometry-sized) arrays never cross the Python→JVM
+    return hop."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType, StructField, StructType
+    outs = {c: StructField(c, DataType.fromDDL(t))
+            for c, (_, _, t) in kernels.items()}
+    fields = [outs.get(f.name, f) for f in df.schema.fields
+              if f.name not in drop or f.name in outs]
+    fields += [f for c, f in outs.items() if c not in df.columns]
+    schema = StructType(fields)
+    specs = [(c, cols, fn, to_arrow_type(outs[c].dataType))
+             for c, (cols, fn, _) in kernels.items()]
 
     def gen(batches):
-        import json
+        import pyarrow as pa
+        for batch in batches:
+            res = {}
+            for c, cols, fn, typ in specs:
+                args = [_to_pylist(batch.column(n)) for n in cols]
+                res[c] = pa.array([fn(*row) for row in zip(*args)],
+                                  type=typ)
+            yield pa.RecordBatch.from_arrays(
+                [res[n] if n in res else batch.column(n)
+                 for n in schema.names], names=schema.names)
 
-        import pandas as pd
-        for pdf in batches:
-            out = []
-            for tup in zip(*[pdf[c] for c in cols]):
-                parsed = [None if g is None else json.loads(g)
-                          for g in tup]
-                res = fn(*parsed)
-                out.append(None if not res else json.dumps(res))
-            pdf = pdf.copy()
-            pdf[out_col] = pd.Series(out, dtype="object")
-            if drop:
-                pdf = pdf.drop(columns=drop)
-            yield pdf
-
-    out = staged.mapInPandas(gen, schema=out_schema)
-    for c in stage:
-        if c in drop:
-            continue
-        typ = out_type if c == out_col else types[c]
-        out = out.withColumn(c, F.from_json(F.col(c), typ))
-    return out
+    return df.mapInArrow(gen, schema)
 
 
 def map_rings_binary(df, col_a, col_b, fn, out_type=RINGS_TYPE,
                      drop_b=False):
     """Per-row ``col_a = fn(col_a, col_b)`` (both nested-array ring
-    columns).  ``col_b`` survives with its original type unless
-    ``drop_b`` — for callers that discard it right after the kernel,
-    dropping it in Python saves the return-hop bytes (guide §4.1)."""
-    return _map_rings(df, [col_a, col_b], fn, col_a, out_type,
-                      drop=[col_b] if drop_b else ())
+    columns; an empty result becomes NULL).  ``col_b`` survives with
+    its original type unless ``drop_b`` — for callers that discard it
+    right after the kernel, dropping it in Python saves the return-hop
+    bytes (guide §4.1)."""
+    return _map_rings(
+        df, {col_a: ([col_a, col_b], lambda a, b: fn(a, b) or None,
+                     out_type)},
+        drop=[col_b] if drop_b else ())
 
 
 def map_rings_unary(df, col, fn, out_type=RINGS_TYPE):
-    """Per-row ``col = fn(col)``."""
-    return _map_rings(df, [col], fn, col, out_type)
-
-
-def map_rings_to_scalar(df, col, fn, out_col, out_type="boolean"):
-    """Per-row SCALAR ``out_col = fn(parsed col)`` (e.g. a validity
-    flag) — the ``_map_rings`` staging contract (every nested-array
-    column crosses the Arrow boundary as JSON text and is restored
-    after), but the kernel's return value lands directly in a new
-    scalar column instead of replacing a ring column."""
-    from pyspark.sql import functions as F
-    all_types = {f.name: f.dataType.simpleString()
-                 for f in df.schema.fields}
-    stage = list(dict.fromkeys(
-        [col] + [c for c, t in all_types.items()
-                 if "array<array" in t]))
-    types = {}
-    staged = df
-    for c in stage:
-        types[c] = all_types[c]
-        staged = staged.withColumn(c, F.to_json(F.col(c)))
-    # copy before .add — StructType.add mutates in place, and mutating
-    # the DataFrame's own schema object desyncs it from the JVM plan
-    from pyspark.sql.types import StructType
-    out_schema = StructType(list(staged.schema.fields)).add(
-        out_col, out_type)
-
-    def gen(batches):
-        import json
-        for pdf in batches:
-            out = []
-            for g in pdf[col]:
-                out.append(fn(None if g is None else json.loads(g)))
-            pdf = pdf.copy()
-            pdf[out_col] = out
-            yield pdf
-
-    out = staged.mapInPandas(gen, schema=out_schema)
-    for c in stage:
-        out = out.withColumn(c, F.from_json(F.col(c), types[c]))
-    return out
+    """Per-row ``col = fn(col)`` (an empty result becomes NULL)."""
+    return _map_rings(df, {col: ([col], lambda g: fn(g) or None,
+                                 out_type)})
 
 
 def rings_literal_sql(rings):

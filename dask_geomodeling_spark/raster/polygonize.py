@@ -105,8 +105,6 @@ class RasterPolygonize(BaseSingle):
                        .alias("n_cells")))
 
         def trace(pdf):
-            import json
-
             import pandas as pd
 
             from dask_geomodeling_spark.geometry.polyclip import (
@@ -119,10 +117,10 @@ class RasterPolygonize(BaseSingle):
                 "time": [pdf["time"].iloc[0]],
                 "component": [pdf["component"].iloc[0]],
                 "value": [float(pdf["value"].iloc[0])],
-                "rings": [json.dumps(rings) if rings else None]})
+                "rings": [rings or None]})
 
         out_schema = ("time timestamp, component string, "
-                      "value double, rings string")
+                      "value double, rings " + RINGS_TYPE)
         # key-hash repartition to full parallelism BEFORE the group
         # map: it satisfies the required clustering (no second
         # exchange) and, being user-numbered, is not coalesced by
@@ -134,7 +132,5 @@ class RasterPolygonize(BaseSingle):
                   .applyInPandas(trace, schema=out_schema))
         return (traced
                 .join(counts, ["time", "component"])
-                .withColumn("rings",
-                            F.from_json(F.col("rings"), RINGS_TYPE))
                 .select("time", "component", "value", "n_cells",
                         "rings"))

@@ -3,7 +3,10 @@ it: exact Difference ring path, polygon-request Intersection, Dissolve
 union='exact'.  Reference parity target: shapely set ops
 (reference geometry/set_operations.py:12,70-78)."""
 
+import datetime
+import math
 import random
+import struct
 
 from dask_geomodeling_spark.geometry.polyclip import (
     polygon_boolean, polygon_difference, polygon_intersection,
@@ -1167,3 +1170,117 @@ def test_is_valid_null_geometry_on_scalar_frames(spark):
         DataFrameSource(dfl, index_column="fid")).plan(spark)
         .collect()}
     assert got == {1: True, 2: None}
+
+
+def _bits(v):
+    """``v`` with every double replaced by its IEEE-754 bytes, so NaN,
+    -0.0 and the infinities compare exactly."""
+    if isinstance(v, list):
+        return [_bits(x) for x in v]
+    return v if v is None else struct.pack("<d", v)
+
+
+def test_to_pylist_matches_pyarrow_on_sliced_nested_nulls():
+    """The offsets-based list conversion equals ``to_pylist`` bit for
+    bit, with NULL at every nesting level and on sliced arrays."""
+    import pyarrow as pa
+
+    from dask_geomodeling_spark.geometry.polyclip import _to_pylist
+    rows = [None, [], [None, [], [None, [1.0, None]]],
+            [[[math.nan, -0.0], [math.inf, 5e-324]]], [[[]]], None,
+            [[[2.0, 3.0]], None]]
+    arr = pa.array(rows, type=pa.list_(pa.list_(pa.list_(pa.float64()))))
+    for lo in range(len(rows)):
+        for hi in range(lo, len(rows) + 1):
+            part = arr.slice(lo, hi - lo)
+            assert _bits(_to_pylist(part)) == _bits(part.to_pylist())
+
+
+def test_ring_columns_cross_arrow_boundary_as_nested_lists(spark):
+    """The ring-map helpers hand the kernel plain nested lists and
+    return its result bit-identical; every other column (a second
+    nested column, a timestamp, a struct) passes through unchanged
+    with its own type.  ``map_rings_unary``/``map_rings_binary`` turn
+    an empty result into NULL; ``_map_rings`` keeps it raw (``[]``
+    stays ``[]``, a scalar ``False`` stays ``False``); several kernels
+    share one pass.  An Overlay plan carries no JSON staging and no
+    pandas map, and Simplify maps every geometry column in one pass."""
+    from dask_geomodeling_spark.geometry.overlay import Overlay
+    from dask_geomodeling_spark.geometry.polyclip import (
+        RINGS_TYPE, _map_rings, map_rings_binary, map_rings_unary)
+    from dask_geomodeling_spark.geometry.sources import DataFrameSource
+    a = [[[0.0, -0.0], [math.inf, -math.inf], [math.nan, None],
+          [5e-324, -1.5]]]
+    b = [[[1.0, 2.0]], [], None]
+    t = datetime.datetime(2020, 2, 29, 12, 30, 0, 123456)
+    rows = [(1, a, b, t, (7, "x")), (2, None, None, None, None),
+            (3, [], b, t, (8, None))]
+    df = spark.createDataFrame(
+        rows, "id bigint, a {0}, b {0}, t timestamp, "
+              "s struct<k:int,v:string>".format(RINGS_TYPE))
+
+    def got(out):
+        return {r["id"]: {k: _bits(v) if k in ("a", "b") else v
+                          for k, v in r.asDict().items()}
+                for r in out.collect()}
+
+    want = got(df)
+    assert want[1]["a"] == _bits(a) and want[3]["a"] == []
+    out = _map_rings(df, {"a": (["a"], lambda g: g, RINGS_TYPE)})
+    assert out.schema == df.schema
+    assert got(out) == want
+    # two kernels in one pass: each reads the input batch
+    both = _map_rings(df, {"a": (["b"], lambda g: g, RINGS_TYPE),
+                           "b": (["a"], lambda g: g, RINGS_TYPE)})
+    assert both.schema == df.schema
+    assert both._jdf.queryExecution().optimizedPlan().toString() \
+        .count("MapInArrow") == 1
+    assert got(both) == {i: {**w, "a": w["b"], "b": w["a"]}
+                         for i, w in want.items()}
+
+    out = got(map_rings_unary(df, "a", lambda g: g))
+    assert {i: r["a"] for i, r in out.items()} == {
+        1: _bits(a), 2: None, 3: None}
+    assert {i: r["b"] for i, r in out.items()} == {
+        i: w["b"] for i, w in want.items()}
+
+    binary = map_rings_binary(df, "a", "b", lambda x, y: x and y,
+                              drop_b=True)
+    assert binary.columns == ["id", "a", "t", "s"]
+    assert {i: r["a"] for i, r in got(binary).items()} == {
+        1: _bits(b), 2: None, 3: None}
+
+    flag = _map_rings(
+        df, {"flag": (["a"], lambda g: None if g is None else bool(g),
+                      "boolean")}, drop=["a"])
+    assert flag.columns == ["id", "b", "t", "s", "flag"]
+    assert flag.schema["b"] == df.schema["b"]
+    assert {i: r["flag"] for i, r in got(flag).items()} == {
+        1: True, 2: None, 3: False}
+
+    sq = [[[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]]]
+    L = spark.createDataFrame([(1, sq)], "lid bigint, rings " + RINGS_TYPE)
+    R = spark.createDataFrame([(7, sq)], "rid bigint, rings " + RINGS_TYPE)
+    ov = Overlay(DataFrameSource(L, index_column="lid"),
+                 DataFrameSource(R, index_column="rid"),
+                 cell_size=4.0).plan(spark)
+    plan = ov._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "from_json" not in plan
+    assert "MapInPandas" not in plan
+
+    # a decoded frame carries vertices, rings and path: Simplify maps
+    # all three in one Python pass
+    from dask_geomodeling_spark.geometry.constructive import Simplify
+    line = [[0.0, 0.0], [1.0, 0.01], [2.0, 0.0]]
+    G = spark.createDataFrame(
+        [(1, line, sq, line)],
+        "gid bigint, vertices array<array<double>>, rings {}, "
+        "path array<array<double>>".format(RINGS_TYPE))
+    simp = Simplify(DataFrameSource(G, index_column="gid"),
+                    tolerance=0.1, algorithm="dp").plan(spark)
+    plan = simp._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    got_row = simp.collect()[0]
+    assert got_row["path"] == [[0.0, 0.0], [2.0, 0.0]]
+    assert got_row["rings"] == sq

@@ -1024,6 +1024,171 @@ def test_raster_components_partition_matches_union_find(spark_prop,
         assert driver_df.schema == dist_df.schema
 
 
+def monotone_chain_hull(pts):
+    """Convex hull vertices of a point list by Andrew's monotone chain
+    (collinear points dropped)."""
+    pts = sorted(map(tuple, pts))
+
+    def half(ps):
+        out = []
+        for p in ps:
+            while len(out) >= 2 and (
+                    (out[-1][0] - out[-2][0]) * (p[1] - out[-2][1])
+                    - (out[-1][1] - out[-2][1]) * (p[0] - out[-2][0])
+                    <= 0):
+                out.pop()
+            out.append(p)
+        return out
+
+    if len(pts) < 3:
+        return pts
+    return half(pts)[:-1] + half(pts[::-1])[:-1]
+
+
+def welzl_circle(pts):
+    """Minimum enclosing circle ``(cx, cy, r)`` by Welzl's incremental
+    algorithm over a seeded shuffle."""
+    import random
+    pts = [tuple(p) for p in pts]
+    random.Random(1).shuffle(pts)
+
+    def circ2(a, b):
+        return ((a[0] + b[0]) / 2, (a[1] + b[1]) / 2, math.dist(a, b) / 2)
+
+    def circ3(a, b, c):
+        (ax, ay), (bx, by), (cx, cy) = a, b, c
+        d = 2 * (ax * (by - cy) + bx * (cy - ay) + cx * (ay - by))
+        if abs(d) < 1e-12:
+            return None
+        a2, b2, c2 = ax * ax + ay * ay, bx * bx + by * by, cx * cx + cy * cy
+        ux = (a2 * (by - cy) + b2 * (cy - ay) + c2 * (ay - by)) / d
+        uy = (a2 * (cx - bx) + b2 * (ax - cx) + c2 * (bx - ax)) / d
+        return (ux, uy, math.dist((ux, uy), a))
+
+    def inside(c, p):
+        return c is not None and math.dist(c[:2], p) <= c[2] + 1e-9
+
+    c = None
+    for i, p in enumerate(pts):
+        if inside(c, p):
+            continue
+        c = (p[0], p[1], 0.0)
+        for j in range(i):
+            if inside(c, pts[j]):
+                continue
+            c = circ2(p, pts[j])
+            for k in range(j):
+                if not inside(c, pts[k]):
+                    c = circ3(p, pts[j], pts[k]) or c
+    return c
+
+
+def min_rectangle_area(hull):
+    """Smallest area of a rectangle enclosing a convex polygon, by
+    rotating calipers: the optimum is flush with one hull edge."""
+    best = math.inf
+    for k, (ax, ay) in enumerate(hull):
+        bx, by = hull[(k + 1) % len(hull)]
+        ln = math.hypot(bx - ax, by - ay)
+        ux, uy = (bx - ax) / ln, (by - ay) / ln
+        us = [(x - ax) * ux + (y - ay) * uy for x, y in hull]
+        vs = [(y - ay) * ux - (x - ax) * uy for x, y in hull]
+        best = min(best, (max(us) - min(us)) * (max(vs) - min(vs)))
+    return best
+
+
+half_grid = st.integers(0, 40).map(lambda v: v * 0.5)
+
+
+@settings(max_examples=3, deadline=None)
+@given(st.lists(
+    st.lists(st.tuples(half_grid, half_grid), min_size=1, max_size=10,
+             unique=True).map(lambda ps: [list(p) for p in ps]),
+    min_size=1, max_size=12))
+@example([[[0.0, 0.0], [1.0, 1.0], [2.0, 2.0]], [[3.0, 4.0]],
+          [[0.0, 0.0], [4.0, 0.0], [4.0, 3.0], [0.0, 3.0], [2.0, 1.5]]])
+def test_hull_circle_envelope_match_models(spark_prop, feats):
+    """ConvexHull equals a monotone-chain hull (vertex sets),
+    MinimumBoundingCircle equals an independent Welzl circle, and
+    OrientedEnvelope's area equals the rotating-calipers minimum over
+    the model hull, on random vertex sets (duplicates removed).  A
+    feature whose hull has fewer than 3 vertices (a point, a segment,
+    collinear points) has a NULL hull and a NULL envelope."""
+    from dask_geomodeling_spark.geometry.constructive import (
+        ConvexHull, MinimumBoundingCircle, OrientedEnvelope)
+    src = DataFrameSource(spark_prop.createDataFrame(
+        list(enumerate(feats)), "fid bigint, vertices array<array<double>>"),
+        index_column="fid")
+    hulls = {r["fid"]: r["vertices"]
+             for r in ConvexHull(src).plan(spark_prop).collect()}
+    circles = {r["fid"]: (r["center_x"], r["center_y"], r["radius"])
+               for r in MinimumBoundingCircle(src).plan(spark_prop)
+               .collect()}
+    envelopes = {r["fid"]: r["rings"]
+                 for r in OrientedEnvelope(src).plan(spark_prop).collect()}
+    for i, pts in enumerate(feats):
+        hull = monotone_chain_hull(pts)
+        if len(hull) < 3:
+            assert hulls[i] is None and envelopes[i] is None, pts
+        else:
+            assert set(map(tuple, hulls[i])) == set(hull), pts
+            assert math.isclose(abs(_rings_area(envelopes[i])),
+                                min_rectangle_area(hull),
+                                rel_tol=1e-9, abs_tol=1e-9), pts
+        cx, cy, r = welzl_circle(pts)
+        got = circles[i]
+        assert math.dist(got[:2], (cx, cy)) <= 1e-6, pts
+        assert abs(got[2] - r) <= 1e-6, pts
+
+
+@settings(max_examples=3, deadline=None)
+@given(st.lists(st.tuples(half_grid, half_grid), min_size=1, max_size=40),
+       st.lists(st.tuples(half_grid, half_grid, st.integers(2, 10),
+                          st.integers(2, 10)), min_size=1, max_size=10))
+# boxes (0,0)-(2,2) and (4,0)-(6,2), centres (1,1) and (5,1): a corner,
+# a point on an edge, one equidistant from both centres, one at exactly
+# the search radius and one beyond it
+@example([(0.0, 0.0), (2.0, 1.0), (3.0, 1.0), (1.0, 5.0), (10.0, 10.0)],
+         [(0.0, 0.0, 4, 4), (4.0, 0.0, 4, 4)])
+def test_spatial_and_nearest_join_match_brute_force(spark_prop, points,
+                                                    boxes):
+    """SpatialJoin (points in closed boxes) and NearestJoin (centres
+    within ``max_distance``, ties to the smallest right id) equal
+    brute force on half-unit grid coordinates, where points on box
+    edges, at exactly the search radius and equidistant from two
+    centres can occur; the explicit example holds each.  The centres
+    frame lists larger ids first, so a tie is not won by row order."""
+    from dask_geomodeling_spark.geometry.spatial_join import (
+        NearestJoin, SpatialJoin)
+    boxes = [(x, y, x + w * 0.5, y + h * 0.5) for x, y, w, h in boxes]
+    P = DataFrameSource(spark_prop.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(points)],
+        "pid bigint, x double, y double"), index_column="pid")
+    B = DataFrameSource(spark_prop.createDataFrame(
+        [(b, *box) for b, box in enumerate(boxes)],
+        "bid bigint, xmin double, ymin double, xmax double, ymax double"),
+        index_column="bid")
+    got = {(r["pid"], r["bid"]) for r in SpatialJoin(
+        P, B, cell_size=6.0).plan(spark_prop).collect()}
+    assert got == {(p, b) for p, (x, y) in enumerate(points)
+                   for b, (x1, y1, x2, y2) in enumerate(boxes)
+                   if x1 <= x <= x2 and y1 <= y <= y2}
+    centres = [((x1 + x2) / 2, (y1 + y2) / 2) for x1, y1, x2, y2 in boxes]
+    C = DataFrameSource(spark_prop.createDataFrame(
+        [(b, x, y) for b, (x, y) in reversed(list(enumerate(centres)))],
+        "bid bigint, x double, y double"), index_column="bid")
+    got = {r["pid"]: r["bid"] for r in NearestJoin(
+        P, C, max_distance=4.0).plan(spark_prop).collect()}
+    want = {}
+    for p, (x, y) in enumerate(points):
+        near = [((x - cx) ** 2 + (y - cy) ** 2, b)
+                for b, (cx, cy) in enumerate(centres)]
+        near = [t for t in near if t[0] <= 16.0]
+        if near:
+            want[p] = min(near)[1]
+    assert got == want
+
+
 @settings(max_examples=15, deadline=None)
 @given(st.lists(st.tuples(st.integers(0, 50), st.integers(0, 10**6)),
                 min_size=1, max_size=200, unique_by=lambda t: t[1]),
